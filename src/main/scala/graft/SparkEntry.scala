@@ -15,10 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `p*`  — composed pipelines (lang → quality → dedup in one plan)
   *  - `m*`  — multimodal binary-column plumbing
   *
-  * Entries without an `oracleSql` row are the hash-based/approximate
-  * operators whose signatures aren't portable SQL; the driver records a
-  * rows-only check for those and their semantics are pinned by ScalaTest
-  * specs instead.
+  * Every `queries` entry has an `oracleSql` row: the two maps hold the
+  * same keys.
   */
 object SparkEntry {
 

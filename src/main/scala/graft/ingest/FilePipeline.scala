@@ -1,15 +1,18 @@
 package graft.ingest
 
+import java.time.LocalDateTime
+import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The incremental file-ingest pipeline state (SURVEY A1/A2/A4/A23/A31):
   * hourly path enumeration, the per-file status state machine, the
   * gzip/JSON validator, the DB-vs-meta reconciler, and the status
-  * aggregation — all as joins over small DataFrames, so the same logic
-  * that the reference runs over an in-memory `meta.json`
-  * (reference: app/service/file_utils.ts:16-45) scales to millions of
-  * files as a checkpoint table.
+  * document. The state is driver-side, as the reference's in-memory
+  * `meta.json` (reference: app/service/file_utils.ts:16-45): one row per
+  * GH Archive hour file, about 8.8k a year, so enumeration and discovery
+  * are plain Scala. Only the validator (it reads the hour files) and the
+  * reconciler (it reads the events table) are Spark jobs.
   */
 object FilePipeline {
 
@@ -21,35 +24,32 @@ object FilePipeline {
     val Imported = 3
   }
 
+  private val pathFormat = DateTimeFormatter.ofPattern("yyyy/MM/dd/yyyy-MM-dd-")
+  private val keyFormat = DateTimeFormatter.ofPattern("yyyyMMddHH")
+
   /** A1 — hourly-file enumerator (reference: app/service/file_utils.ts:56-107,
-    * which hand-rolls the calendar incl. leap years). Spark-first: one
-    * `sequence` of hour timestamps → `date_format` paths. Returns
-    * (path, hour_key) where hour_key = yyyyMMddHH as long (the
+    * which hand-rolls the calendar incl. leap years). Bounds are UTC wall
+    * clock, `yyyy-MM-dd HH:mm:ss`; `java.time` supplies the calendar.
+    * Returns (path, hour_key) where hour_key = yyyyMMddHH as long (the
     * reference's `year*1000000+month*10000+day*100+hour` encoding,
     * app/service/log_importer_status_checker.ts:18).
     */
-  def enumerateHours(spark: SparkSession, startInclusive: String,
-      endExclusive: String): DataFrame =
-    spark.range(1).select(
-      explode(sequence(
-        to_timestamp(lit(startInclusive)),
-        to_timestamp(lit(endExclusive)) - expr("INTERVAL 1 HOUR"),
-        expr("INTERVAL 1 HOUR"))).as("hour_ts"))
-      .select(
-        concat(
-          date_format(col("hour_ts"), "yyyy/MM/dd/yyyy-MM-dd-"),
-          // GH Archive hour component is unpadded (…-H.json.gz)
-          hour(col("hour_ts")).cast("string"),
-          lit(".json.gz")).as("path"),
-        date_format(col("hour_ts"), "yyyyMMddHH").cast("long").as("hour_key"))
+  def enumerateHours(startInclusive: String, endExclusive: String): Seq[(String, Long)] = {
+    def parse(s: String) = LocalDateTime.parse(s.replace(' ', 'T'))
+    val end = parse(endExclusive)
+    Iterator.iterate(parse(startInclusive))(_.plusHours(1)).takeWhile(_.isBefore(end))
+      // GH Archive hour component is unpadded (…-H.json.gz)
+      .map(h => (h.format(pathFormat) + h.getHour + ".json.gz", h.format(keyFormat).toLong))
+      .toSeq
+  }
 
   /** A2 — expected-vs-known diff: new files enter the state machine as
     * NeedDownload (reference: app/service/log_exist_checker.ts:8-19).
-    * `meta` is the checkpoint table (path, status).
+    * `known` holds the checkpoint table's paths. Returns
+    * (path, hour_key, status).
     */
-  def discover(expected: DataFrame, meta: DataFrame): DataFrame =
-    expected.join(meta.select("path"), Seq("path"), "left_anti")
-      .withColumn("status", lit(Status.NeedDownload))
+  def discover(expected: Seq[(String, Long)], known: String => Boolean): Seq[(String, Long, Int)] =
+    expected.collect { case (path, key) if !known(path) => (path, key, Status.NeedDownload) }
 
   /** A4/A5 — validator: PERMISSIVE-read the candidate files and count
     * corrupt lines per input file; any corruption ⇒ the whole file is
@@ -92,25 +92,6 @@ object FilePipeline {
     importedHours.join(presentHours, Seq("hour_key"), "left_anti")
       .withColumn("status", lit(Status.Verified))
   }
-
-  /** A31 — status aggregation (reference: app/service/update_status.ts:9-41):
-    * per-status counts, missing rate, sorted missing list.
-    */
-  def status(meta: DataFrame): DataFrame = {
-    val total = meta.count()
-    meta.groupBy("status").agg(count(lit(1)).as("files"))
-      .withColumn("total", lit(total))
-      .withColumn("rate", col("files").cast("double") / col("total"))
-      .orderBy("status")
-  }
-
-  /** Missing files (anything not yet Imported), sorted — the
-    * `missingArr` of the status document (reference:
-    * app/service/update_status.ts:32-40).
-    */
-  def missing(meta: DataFrame): DataFrame =
-    meta.filter(col("status") =!= Status.Imported)
-      .select("path").orderBy("path")
 
   /** The reference's status document, field-for-field (reference:
     * app/service/update_status.ts:20-39):

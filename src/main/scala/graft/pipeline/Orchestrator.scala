@@ -1,8 +1,11 @@
 package graft.pipeline
 
 import graft.ingest._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Batch pipeline orchestrator (SURVEY A30; reference:
   * app/schedule/update_log.ts:10-52): the hourly cron body as one
@@ -12,113 +15,108 @@ import org.apache.spark.sql.functions._
   * The downloader (A3) is a deployment concern (no egress here): this
   * orchestrator treats "downloaded" as "file exists under baseDir",
   * exactly what the reference's exist-checker establishes
-  * (app/service/log_exist_checker.ts:8-19). State lives in a small
-  * parquet checkpoint table (path, hour_key, status) — the meta.json
-  * analogue that still works with millions of files.
+  * (app/service/log_exist_checker.ts:8-19). State is the reference's
+  * `meta.json`: one (path, hour_key, status) row per hour file, about
+  * 8.8k a year, persisted as a small parquet table. A pass collects it
+  * into a driver-side map, walks the state machine there, and writes it
+  * back once; validation and reconciliation are its only Spark jobs
+  * besides the import.
   */
 object Orchestrator {
 
   import FilePipeline.Status
 
-  def loadMeta(spark: SparkSession, metaPath: String): DataFrame =
-    try spark.read.parquet(metaPath)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("hour_key",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("status",
-              org.apache.spark.sql.types.IntegerType))))
-    }
+  private val metaSchema = StructType(Seq(
+    StructField("path", StringType),
+    StructField("hour_key", LongType),
+    StructField("status", IntegerType)))
 
+  private def metaFrame(spark: SparkSession, rows: Iterable[(String, Long, Int)]): DataFrame =
+    spark.createDataFrame(rows.map { case (p, k, s) => Row(p, k, s) }.toSeq.asJava, metaSchema)
+
+  def loadMeta(spark: SparkSession, metaPath: String): DataFrame =
+    try spark.read.schema(metaSchema).parquet(metaPath)
+    catch { case _: AnalysisException => metaFrame(spark, Nil) }
+
+  /** One Spark write into a sibling temp directory, renamed into place:
+    * a reader of `metaPath` sees the old table, the new one or, between
+    * the two renames, none (an empty meta) — never a half-written one.
+    */
   def saveMeta(meta: DataFrame, metaPath: String): Unit = {
-    val tmp = metaPath + ".tmp"
-    meta.write.mode("overwrite").parquet(tmp)
-    val spark = meta.sparkSession
-    // re-read + rewrite so the overwrite never reads its own input
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(metaPath)
+    val target = new Path(metaPath)
+    val tmp = new Path(metaPath + ".tmp")
+    val old = new Path(metaPath + ".old")
+    val fs = target.getFileSystem(meta.sparkSession.sessionState.newHadoopConf())
+    fs.delete(tmp, true) // a crashed pass's partial write
+    meta.coalesce(1).write.parquet(tmp.toString)
+    fs.delete(old, true)
+    if ((fs.exists(target) && !fs.rename(target, old)) || !fs.rename(tmp, target))
+      throw new java.io.IOException(s"could not move $tmp into place at $metaPath")
+    fs.delete(old, true)
   }
 
-  /** One full pipeline pass. Returns the updated meta table. */
+  /** One full pipeline pass over the hours in [startHour, endHour)
+    * (`yyyy-MM-dd HH:mm:ss`, UTC). Returns the updated meta table.
+    */
   def runOnce(spark: SparkSession, baseDir: String, tablePath: String,
       metaPath: String, startHour: String, endHour: String): DataFrame = {
-    val meta = loadMeta(spark, metaPath)
+    // path → (hour_key, status)
+    val state = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Int)]
+    loadMeta(spark, metaPath).collect()
+      .foreach(r => state(r.getString(0)) = (r.getLong(1), r.getInt(2)))
+    def having(status: Int): Seq[String] =
+      state.collect { case (p, (_, `status`)) => p }.toSeq
+    def set(paths: Seq[String], status: Int): Unit =
+      paths.foreach(p => state(p) = (state(p)._1, status))
+    val prefix = baseDir + "/"
 
     // 1. enumerate + discover (A1/A2)
-    val expected = FilePipeline.enumerateHours(spark, startHour, endHour)
-    val discovered = FilePipeline.discover(expected, meta)
-      .select("path", "hour_key", "status")
-    val known = meta.unionByName(discovered)
+    FilePipeline.discover(FilePipeline.enumerateHours(startHour, endHour), state.contains)
+      .foreach { case (p, k, s) => state(p) = (k, s) }
 
     // 2. exist-check: NeedDownload files present on disk ⇒ Downloaded
-    val onDisk = known.withColumn("exists",
-      when(col("status") === Status.NeedDownload,
-        udfExists(col("path"), lit(baseDir))).otherwise(lit(true)))
-    val afterExist = onDisk.withColumn("status",
-      when(col("status") === Status.NeedDownload && col("exists"), Status.Downloaded)
-        .otherwise(col("status"))).drop("exists")
+    set(having(Status.NeedDownload).filter(p => new java.io.File(prefix + p).exists),
+      Status.Downloaded)
 
     // 3. validate Downloaded files (A4); valid ⇒ Verified, corrupt stays
-    val downloaded = afterExist.filter(col("status") === Status.Downloaded)
-      .select("path").collect().map(r => s"$baseDir/${r.getString(0)}").toSeq
-    val verified =
-      if (downloaded.isEmpty) afterExist
-      else {
-        // validate() reports URIs (file:///...); relativize by splitting
-        // on the literal baseDir prefix, robust to the slash count.
-        val ok = FilePipeline.validate(spark, downloaded)
-          .filter(col("valid"))
-          .select(element_at(
-            split(col("path"),
-              java.util.regex.Pattern.quote(baseDir + "/")), 2).as("path"))
-          .withColumn("ok", lit(true))
-        afterExist.join(ok, Seq("path"), "left")
-          .withColumn("status",
-            when(col("status") === Status.Downloaded && col("ok"), Status.Verified)
-              .otherwise(col("status"))).drop("ok")
-      }
+    val downloaded = having(Status.Downloaded)
+    if (downloaded.nonEmpty) {
+      // validate() reports URIs (file:///...); relativize at the literal
+      // baseDir prefix, robust to the slash count.
+      val valid = FilePipeline.validate(spark, downloaded.map(prefix + _))
+        .filter(col("valid")).select("path").collect().map(_.getString(0))
+        .map(uri => uri.substring(uri.indexOf(prefix) + prefix.length)).toSet
+      set(downloaded.filter(valid), Status.Verified)
+    }
 
     // 4. import Verified files (A5–A19), then fold small per-batch
     // files back into few sorted ones — the background-merge step the
     // reference delegates to ClickHouse's MergeTree engine. Idempotent
     // and a no-op while every month is under the file limit.
-    val toImport = verified.filter(col("status") === Status.Verified)
-      .select("path").collect().map(r => s"$baseDir/${r.getString(0)}").toSeq
+    val toImport = having(Status.Verified)
     if (toImport.nonEmpty) {
-      EventsWriter.ingestHours(spark, toImport, tablePath)
+      EventsWriter.ingestHours(spark, toImport.map(prefix + _), tablePath)
       EventsWriter.compact(spark, tablePath)
     }
-    val afterImport = verified.withColumn("status",
-      when(col("status") === Status.Verified, Status.Imported)
-        .otherwise(col("status")))
+    set(toImport, Status.Imported)
 
     // 5. reconcile imported hours against the table (A23); with no
     // table yet, every Imported row resets (nothing is present)
-    val resets = (try Some(spark.read.parquet(tablePath))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }) match {
-      case Some(events) =>
-        FilePipeline.reconcile(afterImport, events).select("path")
-          .withColumn("reset", lit(true))
-      case None =>
-        afterImport.filter(col("status") === Status.Imported).select("path")
-          .withColumn("reset", lit(true))
-    }
-    val finalMeta = afterImport.join(resets, Seq("path"), "left")
-      .withColumn("status",
-        when(col("reset"), Status.Verified).otherwise(col("status")))
-      .drop("reset")
-      .select("path", "hour_key", "status")
+    val imported = having(Status.Imported)
+    val absent =
+      (try Some(spark.read.parquet(tablePath)) catch { case _: AnalysisException => None }) match {
+        case Some(events) =>
+          FilePipeline.reconcile(
+            metaFrame(spark, imported.map(p => (p, state(p)._1, Status.Imported))), events)
+            .select("path").collect().map(_.getString(0)).toSeq
+        case None => imported
+      }
+    set(absent, Status.Verified)
 
-    saveMeta(finalMeta, metaPath)
-    spark.read.parquet(metaPath)
+    val meta = metaFrame(spark, state.map { case (p, (k, s)) => (p, k, s) })
+    saveMeta(meta, metaPath)
+    meta
   }
-
-  private val udfExists =
-    udf((p: String, base: String) => new java.io.File(s"$base/$p").exists())
 
   /** Non-reentrant wrapper — the reference's in-flight guard
     * (app cache `updating` flag, app/schedule/update_log.ts:14-18):

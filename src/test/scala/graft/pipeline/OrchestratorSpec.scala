@@ -1,9 +1,14 @@
 package graft.pipeline
 
 import graft.SparkTestBase
+import graft.ingest.FilePipeline
 import graft.ingest.FilePipeline.Status
 import java.io.{File, FileOutputStream}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.zip.GZIPOutputStream
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline pass over a local GH Archive directory tree
   * (SURVEY A30): discovery, exist-check, validation, import,
@@ -23,8 +28,27 @@ class OrchestratorSpec extends SparkTestBase {
   // same month share the full ReplacingMergeTree ORDER BY key and
   // legitimately collapse to one row (SURVEY §1.4) — which would then
   // trip the reconciler for the hour whose rows were absorbed.
-  private def evt(id: String, hour: Int): String =
-    f"""{"id":"$id%s","type":"WatchEvent","actor":{"id":$id%s,"login":"a$id%s"},"repo":{"id":2,"name":"r"},"created_at":"2015-01-01T$hour%02d:00:00Z","payload":{"action":"started"}}"""
+  private def evt(id: String, hour: Int): String = evtAt(id, f"2015-01-01T$hour%02d")
+
+  /** `hourStart` is `yyyy-MM-ddTHH`. */
+  private def evtAt(id: String, hourStart: String): String =
+    s"""{"id":"$id","type":"WatchEvent","actor":{"id":$id,"login":"a$id"},"repo":{"id":2,"name":"r"},"created_at":"$hourStart:00:00Z","payload":{"action":"started"}}"""
+
+  /** A fresh archive directory, events table and checkpoint table, and
+    * one `runOnce` pass over `[start, end)` that returns path → status.
+    */
+  private final class Run(start: String, end: String) {
+    val dir = java.nio.file.Files.createTempDirectory("orch").toFile
+    val base = new File(dir, "archive"); base.mkdirs()
+    val table = new File(dir, "events").getAbsolutePath
+    val metaPath = new File(dir, "meta").getAbsolutePath
+    def pass(): Map[String, Int] =
+      Orchestrator.runOnce(spark, base.getAbsolutePath, table, metaPath, start, end)
+        .collect().map(r => r.getAs[String]("path") -> r.getAs[Int]("status")).toMap
+    def rows: Long = spark.read.parquet(table).count()
+    def status: FilePipeline.StatusDoc =
+      FilePipeline.statusDocument(Orchestrator.loadMeta(spark, metaPath), "t")
+  }
 
   test("runOnce: discovers, validates, imports present hours; absent stay NeedDownload") {
     val dir = java.nio.file.Files.createTempDirectory("orch").toFile
@@ -63,5 +87,100 @@ class OrchestratorSpec extends SparkTestBase {
       "2015-01-01 00:00:00", "2015-01-01 03:00:00",
       staleLockMs = 1000L).isDefined) // stale → reclaimed and run
     assert(!lock.exists, "a completed run releases the lock")
+  }
+
+  test("runOnce: a corrupt hour stays Downloaded until re-delivered intact; " +
+      "an imported hour landing again changes nothing") {
+    val h0 = "2015/01/01/2015-01-01-0.json.gz"
+    val h1 = "2015/01/01/2015-01-01-1.json.gz"
+    val run = new Run("2015-01-01 00:00:00", "2015-01-01 02:00:00")
+    write(run.base, h0, Seq(evt("1", 0), evt("2", 0)))
+    write(run.base, h1, Seq(evt("3", 1), """{"id":"4","type":"Wat"""))
+
+    // the validator quarantines the corrupt hour: not imported, and
+    // /status counts it as an import failure
+    val first = run.pass()
+    assert(first === Map(h0 -> Status.Imported, h1 -> Status.Downloaded))
+    assert(run.rows === 2)
+    val doc = run.status
+    assert((doc.total, doc.imported, doc.importFail, doc.missing) === ((2L, 1L, 1L, 0L)))
+
+    // re-delivered intact: imported with its own rows
+    write(run.base, h1, Seq(evt("3", 1), evt("4", 1)))
+    assert(run.pass() === Map(h0 -> Status.Imported, h1 -> Status.Imported))
+    assert(run.rows === 4)
+    assert(run.status.importFail === 0)
+
+    // an Imported hour lands again, unchanged: no status or count moves
+    write(run.base, h0, Seq(evt("1", 0), evt("2", 0)))
+    assert(run.pass() === Map(h0 -> Status.Imported, h1 -> Status.Imported))
+    assert(run.rows === 4)
+  }
+
+  test("runOnce: a deleted month partition resets its hours to Verified; " +
+      "the next pass re-imports them") {
+    val jan = "2015/01/31/2015-01-31-23.json.gz"
+    val feb = "2015/02/01/2015-02-01-0.json.gz"
+    val run = new Run("2015-01-31 23:00:00", "2015-02-01 01:00:00")
+    write(run.base, jan, Seq(evtAt("1", "2015-01-31T23")))
+    write(run.base, feb, Seq(evtAt("2", "2015-02-01T00"), evtAt("3", "2015-02-01T00")))
+    assert(run.pass() === Map(jan -> Status.Imported, feb -> Status.Imported))
+    assert(run.rows === 3)
+
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(run.table, "month_key=201502"))
+    assert(run.pass() === Map(jan -> Status.Imported, feb -> Status.Verified))
+    assert(run.rows === 1)
+    assert(run.pass() === Map(jan -> Status.Imported, feb -> Status.Imported))
+    assert(run.rows === 3)
+  }
+
+  /** Runs `body` under a job tag; returns its result, the stage names of
+    * each Spark job it started and the physical plan of each SQL execution.
+    */
+  private def traced[T](body: => T): (T, Seq[String], Seq[String]) = {
+    val tag = "orchestrator-spec-traced"
+    val jobs, plans = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag)))
+          jobs.add(e.stageInfos.map(_.name).mkString(";"))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val result = try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+    } finally {
+      org.apache.spark.graft.ListenerBridge.flush(sc)
+      sc.removeSparkListener(listener)
+    }
+    (result, jobs.asScala.toSeq, plans.asScala.toSeq)
+  }
+
+  test("runOnce: an idle pass validates nothing and runs a bounded number of jobs") {
+    val h0 = "2015/01/01/2015-01-01-0.json.gz"
+    // hour 1 never lands: the idle pass still exist-checks it
+    val run = new Run("2015-01-01 00:00:00", "2015-01-01 02:00:00")
+    write(run.base, h0, Seq(evt("1", 0)))
+    // the validator and the parser are the only readers of hour files
+    def validated(plans: Seq[String]) = plans.exists(_.contains("Scan text"))
+    val (_, _, importPlans) = traced(run.pass())
+    assert(validated(importPlans), "the probe must see the validator's scan of hour files")
+
+    val (st, jobs, plans) = traced(run.pass())
+    assert(st === Map(h0 -> Status.Imported,
+      "2015/01/01/2015-01-01-1.json.gz" -> Status.NeedDownload))
+    assert(!validated(plans), "an idle pass read hour files: the validator ran")
+    // measured 6 jobs: collecting the checkpoint table (1), reconciling
+    // against the events table (its footer read, then 3 adaptive query
+    // stages of the anti-join) and the one checkpoint write (1). The
+    // DataFrame-join pass this replaced ran 13.
+    assert(jobs.size <= 6, jobs.mkString("\n"))
   }
 }
