@@ -113,26 +113,32 @@ object EventsWriter {
     * of ClickHouse's merge-time dedup + the explicit
     * `OPTIMIZE TABLE ... DEDUPLICATE` (reference:
     * app/service/gitee_importer.ts:426).
+    *
+    * The batch is materialized once (`localCheckpoint`): the
+    * range-partitioner's sampling and the write both consume it, and
+    * for an ingest batch the upstream is the JSON parse, which would
+    * otherwise run twice. localCheckpoint, NOT persist: persist's
+    * in-memory-columnar conversion on this ~95-col nested schema costs
+    * more than a parse pass; the checkpoint stores raw UnsafeRows. The
+    * batch's month set is observed during that materialization
+    * (`Dataset.observe`), so it costs no job of its own, and is exact:
+    * every month the write overwrites is one the merge read back. The
+    * table is read back with the batch's schema, so no job infers it
+    * from parquet footers. (The existing months are left uncached:
+    * parquet re-scans are columnar, splittable and cheap relative to
+    * re-parsing.)
     */
   def merge(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    // The batch is consumed three times (month-key collect, the
-    // range-partitioner's sampling, the write). For an ingest batch the
-    // upstream is a gzip JSON parse — re-running it dominates the whole
-    // merge — so materialize the parsed batch once. localCheckpoint,
-    // NOT persist: persist's in-memory-columnar conversion on this
-    // ~95-col nested schema costs more than a parse pass; the
-    // checkpoint stores raw UnsafeRows. (The re-read of the EXISTING
-    // table is left uncached: parquet re-scans are columnar, splittable
-    // and cheap relative to re-parsing gzip.)
-    val keyedBatch = withMonthKey(batch).localCheckpoint()
+    val observed = withMonthKey(batch)
+      .observe("months", collect_set(col(partitionCol)))
+    val keyedBatch = observed.localCheckpoint()
     try {
-      val months = keyedBatch.select(partitionCol).distinct()
-        .collect().map(_.getInt(0))
+      val months = observed.queryExecution.observedMetrics("months").getSeq[Int](0)
       val existing =
         try {
-          val t = spark.read.parquet(path)
-          Some(t.filter(col(partitionCol).isin(months.toSeq: _*)))
+          val t = spark.read.schema(keyedBatch.schema).parquet(path)
+          Some(t.filter(col(partitionCol).isin(months: _*)))
         } catch { case _: org.apache.spark.sql.AnalysisException => None }
       val unioned = existing match {
         case Some(old) => old.unionByName(keyedBatch)

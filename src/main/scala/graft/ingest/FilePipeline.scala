@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The incremental file-ingest pipeline state (SURVEY A1/A2/A4/A23/A31):
@@ -11,8 +11,11 @@ import org.apache.spark.sql.functions._
   * document. The state is driver-side, as the reference's in-memory
   * `meta.json` (reference: app/service/file_utils.ts:16-45): one row per
   * GH Archive hour file, about 8.8k a year, so enumeration and discovery
-  * are plain Scala. Only the validator (it reads the hour files) and the
-  * reconciler (it reads the events table) are Spark jobs.
+  * are plain Scala. The validator's corrupt predicate runs on the lines
+  * of [[GhEventParser.readLines]], the one reader of hour files; a
+  * pipeline pass observes it while materializing the lines it imports
+  * from, so hour files are not read a second time to validate them. The
+  * reconciler collects the events table's hour keys to the driver.
   */
 object FilePipeline {
 
@@ -51,45 +54,73 @@ object FilePipeline {
   def discover(expected: Seq[(String, Long)], known: String => Boolean): Seq[(String, Long, Int)] =
     expected.collect { case (path, key) if !known(path) => (path, key, Status.NeedDownload) }
 
-  /** A4/A5 — validator: PERMISSIVE-read the candidate files and count
-    * corrupt lines per input file; any corruption ⇒ the whole file is
-    * quarantined for re-download, mirroring the reference's
-    * delete-and-reset (reference: app/checker_worker.js:8-51,
-    * app/service/log_valid_checker.ts:9-42). Returns
-    * (path, total_lines, corrupt_lines, valid).
+  /** What the corrupt predicate reads of a line: the three fields whose
+    * joint absence marks it corrupt. A type mismatch below them never
+    * nulls a line (the tolerant parse keeps partial results), so the
+    * rest of the envelope cannot change the verdict; the JSON tokenizer
+    * still checks the whole line's syntax, and skips the rest unparsed.
+    */
+  private val envelopeKeys = org.apache.spark.sql.types.StructType(
+    GhArchiveSchema.envelope.filter(f => Set("id", "type", "created_at")(f.name)))
+
+  /** A4 — the corrupt-line predicate: adds a boolean `corrupt` column to
+    * hour-file lines (a `value` column): the line is not a JSON object,
+    * or its id, type and created_at are all null. from_json rather than
+    * the JSON datasource: Spark disallows referencing the file source's
+    * internal corrupt-record column (SPARK-21610), and from_json yields
+    * an all-null struct for a corrupt line.
+    */
+  def flagCorrupt(lines: DataFrame): DataFrame = {
+    val r = col("__r")
+    lines.withColumn("__r", from_json(col("value"), envelopeKeys))
+      .withColumn("corrupt", r.isNull ||
+        (r("id").isNull && r("type").isNull && r("created_at").isNull))
+      .drop("__r")
+  }
+
+  /** A4/A5 — validator: count corrupt lines per input file; any
+    * corruption ⇒ the whole file is quarantined for re-download,
+    * mirroring the reference's delete-and-reset (reference:
+    * app/checker_worker.js:8-51, app/service/log_valid_checker.ts:9-42).
+    * Returns (path, total_lines, corrupt_lines, valid); a file with no
+    * line gets no row. The pipeline pass does not call it: it observes
+    * the same predicate over the lines it imports from
+    * ([[GhEventParser.readLanded]]).
     */
   def validate(spark: SparkSession, files: Seq[String]): DataFrame =
-    // text + from_json rather than read.json: (a) Spark disallows
-    // referencing the file source's internal corrupt-record column
-    // (SPARK-21610), and the cache() workaround makes
-    // input_file_name() come back empty — losing the per-file
-    // accounting this operator exists for; (b) from_json has no such
-    // restriction and yields an all-null struct for corrupt lines.
-    spark.read.text(files: _*)
-      .select(input_file_name().as("path"),
-        from_json(col("value"), GhArchiveSchema.envelope).as("r"))
-      .select(col("path"),
-        (col("r").isNull ||
-          (col("r.id").isNull && col("r.type").isNull &&
-            col("r.created_at").isNull)).as("corrupt"))
+    flagCorrupt(GhEventParser.readLines(spark, files))
       .groupBy("path")
       .agg(count(lit(1)).as("total_lines"),
         sum(col("corrupt").cast("long")).as("corrupt_lines"))
       .withColumn("valid", col("corrupt_lines") === 0)
 
-  /** A23 — import-status reconciler: hours marked Imported in meta but
-    * absent from the events table get reset to Verified (re-import).
-    * The reference issues a NOT-IN-subquery over arrayJoin'd hour keys
-    * (reference: app/service/log_importer_status_checker.ts:23-26);
-    * here it is a left-anti join of meta's imported hours against the
-    * hours actually present in the table.
+  /** A23 — import-status reconciler: the hours of `imported` that are
+    * absent from the events table, whose `created_at` column is read
+    * (the reference issues a NOT-IN-subquery over arrayJoin'd hour keys,
+    * reference: app/service/log_importer_status_checker.ts:23-26). The
+    * table's distinct hour keys are collected to the driver, one set per
+    * task, and subtracted there: one Spark job, no join. It still scans
+    * the table's whole `created_at` column on every call.
+    */
+  def absentHours(imported: Seq[Long], events: DataFrame): Set[Long] =
+    if (imported.isEmpty) Set.empty
+    else {
+      val present = events.where(col("created_at").isNotNull)
+        .select(date_format(col("created_at"), "yyyyMMddHH").cast("long"))
+        .as(Encoders.scalaLong)
+        .mapPartitions(keys => keys.toSet.iterator)(Encoders.scalaLong)
+        .collect().toSet
+      imported.toSet -- present
+    }
+
+  /** [[absentHours]] over a meta table: its Imported rows whose hour is
+    * absent from `events`, with status reset to Verified (re-import).
     */
   def reconcile(meta: DataFrame, events: DataFrame): DataFrame = {
-    val importedHours = meta.filter(col("status") === Status.Imported)
-    val presentHours = events
-      .select(date_format(col("created_at"), "yyyyMMddHH").cast("long").as("hour_key"))
-      .distinct()
-    importedHours.join(presentHours, Seq("hour_key"), "left_anti")
+    val imported = meta.filter(col("status") === Status.Imported)
+    val absent = absentHours(
+      imported.select("hour_key").as(Encoders.scalaLong).collect().toSeq, events)
+    imported.filter(col("hour_key").isin(absent.toSeq: _*))
       .withColumn("status", lit(Status.Verified))
   }
 

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -59,34 +59,67 @@ object GhEventParser {
   private def iDef(c: Column): Column = coalesce(c, lit(0))
   private def bDef(c: Column): Column = coalesce(c, lit(false))
 
-  /** Read raw hour files (gzip NDJSON) with the fixed schema, keeping
-    * corrupt lines in `_corrupt_record` (tolerant parse — SURVEY A5).
+  /** The lines of hour files (gzip NDJSON) as (`path`, `value`), `path`
+    * being the file's URI. The one reader of hour files: [[readRaw]],
+    * [[readLanded]] and the validator ([[FilePipeline.validate]]) all go
+    * through it.
     *
-    * Parallelism policy: gzip is not splittable, so the EXPENSIVE part
-    * (JSON parse + the wide projection) is capped at #files tasks. For
-    * a large batch (full import: thousands of hour files) that is
-    * exactly right — file-level parallelism saturates the cluster and
-    * nothing is shuffled. For a SMALL batch (the hourly cron: one or a
-    * few files) it leaves most cores idle, so decompress to raw lines
-    * first (cheap, still #files tasks), redistribute the lines across
-    * the cluster, then parse — the shuffle moves compressed-text-sized
-    * data once and buys #cores-way parsing. Measured on a 1M-event
-    * 8-file batch at local[32]: the line-repartition path is what
-    * takes ingest from ~9.5k to >20k records/sec.
+    * Parallelism policy: gzip is not splittable, so the decompression is
+    * capped at #files tasks. For a large batch (full import: thousands of
+    * hour files) that is exactly right — file-level parallelism saturates
+    * the cluster and nothing is shuffled. For a SMALL batch (the hourly
+    * cron: one or a few files) it leaves most cores idle, so the lines are
+    * redistributed across the cluster, and what runs on them (the JSON
+    * parse and the wide projection, the validator's check) runs
+    * #cores-way — the shuffle moves compressed-text-sized data once.
+    * Measured on a 1M-event 8-file batch at local[32]: the
+    * line-repartition path is what takes ingest from ~9.5k to >20k
+    * records/sec.
     */
-  def readRaw(spark: SparkSession, paths: Seq[String]): DataFrame = {
+  def readLines(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
-    def reader = spark.read
+    val lines = spark.read.text(paths: _*)
+      .select(input_file_name().as("path"), col("value"))
+    if (paths.size >= cores) lines else lines.repartition(cores)
+  }
+
+  /** Raw envelope rows of hour-file lines (a `value` column), read with
+    * the fixed schema, keeping corrupt lines in `_corrupt_record`
+    * (tolerant parse — SURVEY A5). The JSON datasource, NOT from_json:
+    * downstream field expansion collapses into the projection and
+    * re-parses the line once per referenced column.
+    */
+  def readJson(lines: DataFrame): DataFrame =
+    lines.sparkSession.read
       .schema(GhArchiveSchema.envelope)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-    if (paths.size >= cores) reader.json(paths: _*)
-    else
-      // same JSON datasource (same tolerant-parse semantics), fed
-      // redistributed lines instead of whole files. NOT from_json:
-      // downstream field expansion collapses into the projection and
-      // re-parses the line once per referenced column.
-      reader.json(spark.read.textFile(paths: _*).repartition(cores))
+      .json(lines.select("value").as(Encoders.STRING))
+
+  /** Raw envelope rows of hour files: [[readJson]] over [[readLines]]. */
+  def readRaw(spark: SparkSession, paths: Seq[String]): DataFrame =
+    readJson(readLines(spark, paths))
+
+  /** One pipeline pass's read of the hour files it may import: their
+    * [[readLines]], materialized once (`localCheckpoint`), with the
+    * validator's verdict on each file observed while they materialize
+    * (`Dataset.observe`, the corrupt predicate of
+    * [[FilePipeline.flagCorrupt]]), so each file is decompressed once
+    * and checked on every core. Returns the lines and, for every file
+    * holding at least one line, URI → valid (no corrupt line). A file
+    * with no line is absent, so it is never valid, as in
+    * [[FilePipeline.validate]]. The caller frees the lines with
+    * `Dedup.unpersistCheckpoint`.
+    */
+  def readLanded(spark: SparkSession, paths: Seq[String]): (DataFrame, Map[String, Boolean]) = {
+    val observed = FilePipeline.flagCorrupt(readLines(spark, paths))
+      .observe("files", collect_set(col("path")),
+        collect_set(when(col("corrupt"), col("path"))))
+      .drop("corrupt")
+    val lines = observed.localCheckpoint()
+    val files = observed.queryExecution.observedMetrics("files")
+    val corrupt = files.getSeq[String](1).toSet
+    (lines, files.getSeq[String](0).map(p => p -> !corrupt(p)).toMap)
   }
 
   /** The A6–A18 projection. Input: raw envelope rows ([[readRaw]]).

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.ingest._
+import graft.operators.Dedup
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -19,8 +20,12 @@ import scala.jdk.CollectionConverters._
   * `meta.json`: one (path, hour_key, status) row per hour file, about
   * 8.8k a year, persisted as a small parquet table. A pass collects it
   * into a driver-side map, walks the state machine there, and writes it
-  * back once; validation and reconciliation are its only Spark jobs
-  * besides the import.
+  * back once. Each Downloaded or Verified hour file is decompressed once
+  * per pass: the validator's verdict is observed while its lines
+  * materialize ([[GhEventParser.readLanded]]), and only the lines of
+  * files that import are parsed and merged. Reconciliation collects the
+  * table's hour keys to the driver and subtracts them there. Both tables
+  * are read with their known schemas, so no job infers one.
   */
 object Orchestrator {
 
@@ -31,16 +36,31 @@ object Orchestrator {
     StructField("hour_key", LongType),
     StructField("status", IntegerType)))
 
+  /** The events table as stored: read with it, no job infers the schema
+    * from parquet footers.
+    */
+  private val eventsSchema =
+    EventsSchema.schema.add(EventsWriter.partitionCol, IntegerType)
+
   private def metaFrame(spark: SparkSession, rows: Iterable[(String, Long, Int)]): DataFrame =
     spark.createDataFrame(rows.map { case (p, k, s) => Row(p, k, s) }.toSeq.asJava, metaSchema)
 
-  def loadMeta(spark: SparkSession, metaPath: String): DataFrame =
-    try spark.read.schema(metaSchema).parquet(metaPath)
-    catch { case _: AnalysisException => metaFrame(spark, Nil) }
+  /** The checkpoint table; `<meta>.old` when `<meta>` is missing (a
+    * [[saveMeta]] stopped between its two renames); empty when neither
+    * exists.
+    */
+  def loadMeta(spark: SparkSession, metaPath: String): DataFrame = {
+    def read(path: String) =
+      try Some(spark.read.schema(metaSchema).parquet(path))
+      catch { case _: AnalysisException => None }
+    read(metaPath).orElse(read(metaPath + ".old")).getOrElse(metaFrame(spark, Nil))
+  }
 
   /** One Spark write into a sibling temp directory, renamed into place:
     * a reader of `metaPath` sees the old table, the new one or, between
-    * the two renames, none (an empty meta) — never a half-written one.
+    * the two renames, `<meta>.old`, which [[loadMeta]] falls back to —
+    * never a half-written or empty one. `<meta>.old` is only replaced
+    * when `<meta>` exists to take its place.
     */
   def saveMeta(meta: DataFrame, metaPath: String): Unit = {
     val target = new Path(metaPath)
@@ -49,9 +69,12 @@ object Orchestrator {
     val fs = target.getFileSystem(meta.sparkSession.sessionState.newHadoopConf())
     fs.delete(tmp, true) // a crashed pass's partial write
     meta.coalesce(1).write.parquet(tmp.toString)
-    fs.delete(old, true)
-    if ((fs.exists(target) && !fs.rename(target, old)) || !fs.rename(tmp, target))
-      throw new java.io.IOException(s"could not move $tmp into place at $metaPath")
+    def fail() = throw new java.io.IOException(s"could not move $tmp into place at $metaPath")
+    if (fs.exists(target)) {
+      fs.delete(old, true)
+      if (!fs.rename(target, old)) fail()
+    }
+    if (!fs.rename(tmp, target)) fail()
     fs.delete(old, true)
   }
 
@@ -78,40 +101,43 @@ object Orchestrator {
     set(having(Status.NeedDownload).filter(p => new java.io.File(prefix + p).exists),
       Status.Downloaded)
 
-    // 3. validate Downloaded files (A4); valid ⇒ Verified, corrupt stays
-    val downloaded = having(Status.Downloaded)
-    if (downloaded.nonEmpty) {
-      // validate() reports URIs (file:///...); relativize at the literal
-      // baseDir prefix, robust to the slash count.
-      val valid = FilePipeline.validate(spark, downloaded.map(prefix + _))
-        .filter(col("valid")).select("path").collect().map(_.getString(0))
-        .map(uri => uri.substring(uri.indexOf(prefix) + prefix.length)).toSet
-      set(downloaded.filter(valid), Status.Verified)
-    }
+    // 3. read every Downloaded and Verified file once (A4/A5): the
+    // validator's verdict is observed while the lines materialize, so
+    // valid Downloaded files become Verified without a second read;
+    // corrupt ones stay Downloaded.
+    val landed = having(Status.Downloaded) ++ having(Status.Verified)
+    if (landed.nonEmpty) {
+      // the reader reports URIs (file:///...); relativize at the literal
+      // baseDir prefix, robust to the slash count
+      val (lines, files) = GhEventParser.readLanded(spark, landed.map(prefix + _))
+      try {
+        val uri = files.keys.map(u => u.substring(u.indexOf(prefix) + prefix.length) -> u).toMap
+        set(having(Status.Downloaded).filter(p => uri.get(p).exists(files)), Status.Verified)
 
-    // 4. import Verified files (A5–A19), then fold small per-batch
-    // files back into few sorted ones — the background-merge step the
-    // reference delegates to ClickHouse's MergeTree engine. Idempotent
-    // and a no-op while every month is under the file limit.
-    val toImport = having(Status.Verified)
-    if (toImport.nonEmpty) {
-      EventsWriter.ingestHours(spark, toImport.map(prefix + _), tablePath)
-      EventsWriter.compact(spark, tablePath)
+        // 4. import Verified files (A5–A19): only their lines are parsed.
+        // Then fold small per-batch files back into few sorted ones — the
+        // background-merge step the reference delegates to ClickHouse's
+        // MergeTree engine. Idempotent and a no-op while every month is
+        // under the file limit.
+        val toImport = having(Status.Verified)
+        if (toImport.nonEmpty) {
+          val batch = lines.filter(col("path").isin(toImport.flatMap(uri.get): _*))
+          EventsWriter.merge(GhEventParser.parse(GhEventParser.readJson(batch)), tablePath)
+          EventsWriter.compact(spark, tablePath)
+        }
+        set(toImport, Status.Imported)
+      } finally Dedup.unpersistCheckpoint(lines)
     }
-    set(toImport, Status.Imported)
 
     // 5. reconcile imported hours against the table (A23); with no
     // table yet, every Imported row resets (nothing is present)
     val imported = having(Status.Imported)
+    val keys = imported.map(state(_)._1)
     val absent =
-      (try Some(spark.read.parquet(tablePath)) catch { case _: AnalysisException => None }) match {
-        case Some(events) =>
-          FilePipeline.reconcile(
-            metaFrame(spark, imported.map(p => (p, state(p)._1, Status.Imported))), events)
-            .select("path").collect().map(_.getString(0)).toSeq
-        case None => imported
-      }
-    set(absent, Status.Verified)
+      (try Some(spark.read.schema(eventsSchema).parquet(tablePath))
+       catch { case _: AnalysisException => None })
+        .fold(keys.toSet)(FilePipeline.absentHours(keys, _))
+    set(imported.filter(p => absent(state(p)._1)), Status.Verified)
 
     val meta = metaFrame(spark, state.map { case (p, (k, s)) => (p, k, s) })
     saveMeta(meta, metaPath)

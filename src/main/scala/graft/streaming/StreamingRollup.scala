@@ -19,16 +19,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Exactly-once then has to be built, and is, via generation dirs:
   *
   *  - each batch writes a complete new generation `state_<batchId>`;
-  *  - a single pointer file `_current` is atomically swapped (write
-  *    temp + rename) to the new generation only after its parquet is
-  *    fully written;
+  *  - only after its parquet is fully written does an empty marker
+  *    `_commit_<batchId>` activate it: the current generation is the
+  *    one of the highest marker. Creating a file is atomic on every
+  *    filesystem, and no step removes the last marker before a newer
+  *    one exists. (A single overwritten pointer file is not enough:
+  *    Hadoop's rename with `Options.Rename.OVERWRITE` deletes the target
+  *    and then renames on filesystems without a native overwriting
+  *    rename, the local one included — the same window.);
   *  - a REPLAYED batch (restart from checkpoint re-delivers the last
   *    uncommitted batch) is detected by `batchId <= lastBatchId` and
   *    skipped — merging it twice would double-count, the classic
   *    foreachBatch pitfall;
-  *  - older generations are deleted best-effort after the swap; a
-  *    crash at any point leaves `_current` pointing at a complete
-  *    generation.
+  *  - older generations and markers are deleted best-effort after the
+  *    new marker exists; a crash at any point leaves the highest marker
+  *    naming a complete generation.
   */
 object StreamingRollup {
 
@@ -43,17 +48,18 @@ object StreamingRollup {
     private def fs(spark: SparkSession) =
       new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    private def currentGen(spark: SparkSession): Option[String] = {
-      val f = fs(spark); val p = new Path(stateDir, "_current")
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try {
-          val s = scala.io.Source.fromInputStream(in).mkString.trim
-          if (s.isEmpty) None else Some(s)
-        } finally in.close()
-      }
+    private val commitPrefix = "_commit_"
+
+    /** Batch ids of the commit markers; empty before the first commit. */
+    private def committed(spark: SparkSession): Seq[Long] = {
+      val f = fs(spark); val dir = new Path(stateDir)
+      if (!f.exists(dir)) Nil
+      else f.listStatus(dir).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith(commitPrefix)).map(_.stripPrefix(commitPrefix).toLong)
     }
+
+    private def currentGen(spark: SparkSession): Option[String] =
+      committed(spark).maxOption.map(id => s"state_$id")
 
     /** Highest batch id folded into the current generation; -1 before
       * the first commit.
@@ -81,21 +87,16 @@ object StreamingRollup {
       }
       val gen = s"state_$batchId"
       merged.write.mode("overwrite").parquet(s"$stateDir/$gen")
-      // atomic pointer swap: temp file + rename
+      // activate it: an atomic create of a marker no earlier step made
       val f = fs(spark)
-      val tmp = new Path(stateDir, s"_current.tmp.$batchId")
-      val out = f.create(tmp, true)
-      try out.write(gen.getBytes("UTF-8")) finally out.close()
-      val cur = new Path(stateDir, "_current")
-      if (f.exists(cur)) f.delete(cur, false)
-      f.rename(tmp, cur)
-      // best-effort cleanup of superseded generations
-      currentGen(spark).foreach { keep =>
-        val st = f.listStatus(new Path(stateDir))
-        st.filter(s => s.isDirectory && s.getPath.getName.startsWith("state_")
-            && s.getPath.getName != keep)
-          .foreach(s => f.delete(s.getPath, true))
-      }
+      f.create(new Path(stateDir, s"$commitPrefix$batchId"), true).close()
+      // best-effort cleanup of superseded generations, then their markers
+      f.listStatus(new Path(stateDir))
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("state_")
+          && s.getPath.getName != gen)
+        .foreach(s => f.delete(s.getPath, true))
+      committed(spark).filter(_ != batchId)
+        .foreach(id => f.delete(new Path(stateDir, s"$commitPrefix$id"), false))
     }
   }
 

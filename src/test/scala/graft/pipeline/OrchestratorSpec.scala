@@ -134,6 +134,63 @@ class OrchestratorSpec extends SparkTestBase {
     assert(run.rows === 3)
   }
 
+  test("runOnce: a corrupt Downloaded, a valid Downloaded and a Verified hour land " +
+      "together: one read of each, and only the last two import") {
+    val h0 = "2015/01/01/2015-01-01-0.json.gz"
+    val h1 = "2015/01/01/2015-01-01-1.json.gz"
+    val h2 = "2015/01/01/2015-01-01-2.json.gz"
+    val run = new Run("2015-01-01 00:00:00", "2015-01-01 03:00:00")
+    write(run.base, h0, Seq(evt("1", 0), evt("2", 0)))
+    assert(run.pass()(h0) === Status.Imported)
+    // the month's rows go missing: the reconciler resets h0 to Verified
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(run.table, "month_key=201501"))
+    assert(run.pass()(h0) === Status.Verified)
+
+    write(run.base, h1, Seq(evt("3", 1), """{"id":"4","type":"Wat"""))
+    write(run.base, h2, Seq(evt("5", 2), evt("6", 2)))
+    val (st, _, plans) = traced(run.pass())
+    assert(st === Map(h0 -> Status.Imported, h1 -> Status.Downloaded, h2 -> Status.Imported))
+    assert(plans.count(_.contains("Scan text")) === 1,
+      "the pass must read the hour files once:\n" + plans.mkString("\n"))
+    assert(spark.read.parquet(run.table).select("id").collect().map(_.getLong(0)).sorted
+      === Array(1L, 2L, 5L, 6L))
+    val doc = run.status
+    assert((doc.total, doc.imported, doc.importFail, doc.missing) === ((3L, 2L, 1L, 0L)))
+  }
+
+  test("runOnce: an event stamped in the previous month merges into that month; " +
+      "its rows survive") {
+    val jan = "2015/01/31/2015-01-31-23.json.gz"
+    val feb = "2015/02/01/2015-02-01-0.json.gz"
+    val run = new Run("2015-01-31 23:00:00", "2015-02-01 01:00:00")
+    write(run.base, jan, Seq(evtAt("1", "2015-01-31T23"), evtAt("2", "2015-01-31T23")))
+    assert(run.pass()(jan) === Status.Imported)
+    // the file's name says February; its one event says January
+    write(run.base, feb, Seq(evtAt("3", "2015-01-31T23").replace(":00:00Z", ":59:59Z")))
+    run.pass()
+    val byMonth = spark.read.parquet(run.table).select("month_key", "id").collect()
+      .map(r => (r.getInt(0), r.getLong(1))).sorted.toSeq
+    assert(byMonth === Seq((201501, 1L), (201501, 2L), (201501, 3L)))
+    assert(!new File(run.table, "month_key=201502").exists)
+  }
+
+  test("loadMeta: a saveMeta stopped between its two renames leaves <meta>.old, " +
+      "which is read; the next pass imports nothing again") {
+    val h0 = "2015/01/01/2015-01-01-0.json.gz"
+    val run = new Run("2015-01-01 00:00:00", "2015-01-01 01:00:00")
+    write(run.base, h0, Seq(evt("1", 0)))
+    assert(run.pass() === Map(h0 -> Status.Imported))
+    // the on-disk state between `<meta>` → `<meta>.old` and `<meta>.tmp` → `<meta>`
+    assert(new File(run.metaPath).renameTo(new File(run.metaPath + ".old")))
+    new File(run.metaPath + ".tmp").mkdirs()
+    assert(run.status.imported === 1L)
+    val (st, _, plans) = traced(run.pass())
+    assert(st === Map(h0 -> Status.Imported))
+    assert(!plans.exists(_.contains("Scan text")), "the pass re-read an imported hour")
+    assert(run.rows === 1L)
+    assert(new File(run.metaPath).exists && !new File(run.metaPath + ".old").exists)
+  }
+
   /** Runs `body` under a job tag; returns its result, the stage names of
     * each Spark job it started and the physical plan of each SQL execution.
     */
@@ -168,19 +225,42 @@ class OrchestratorSpec extends SparkTestBase {
     // hour 1 never lands: the idle pass still exist-checks it
     val run = new Run("2015-01-01 00:00:00", "2015-01-01 02:00:00")
     write(run.base, h0, Seq(evt("1", 0)))
-    // the validator and the parser are the only readers of hour files
+    // GhEventParser.readLines is the only reader of hour files
     def validated(plans: Seq[String]) = plans.exists(_.contains("Scan text"))
     val (_, _, importPlans) = traced(run.pass())
-    assert(validated(importPlans), "the probe must see the validator's scan of hour files")
+    assert(validated(importPlans), "the probe must see the pass's scan of hour files")
 
     val (st, jobs, plans) = traced(run.pass())
     assert(st === Map(h0 -> Status.Imported,
       "2015/01/01/2015-01-01-1.json.gz" -> Status.NeedDownload))
-    assert(!validated(plans), "an idle pass read hour files: the validator ran")
-    // measured 6 jobs: collecting the checkpoint table (1), reconciling
-    // against the events table (its footer read, then 3 adaptive query
-    // stages of the anti-join) and the one checkpoint write (1). The
-    // DataFrame-join pass this replaced ran 13.
-    assert(jobs.size <= 6, jobs.mkString("\n"))
+    assert(!validated(plans), "an idle pass read hour files")
+    // measured 3 jobs: collecting the checkpoint table (1), collecting
+    // the events table's hour keys to reconcile against (1) and the one
+    // checkpoint write (1). Before the events table was read with its
+    // known schema and reconciled on the driver, the idle pass ran 6 (a
+    // footer read and a 3-stage anti-join); the DataFrame-join pass
+    // before that ran 13.
+    assert(jobs.size <= 3, jobs.mkString("\n"))
+  }
+
+  test("runOnce: an importing pass runs a bounded number of jobs") {
+    val h0 = "2015/01/01/2015-01-01-0.json.gz"
+    val h1 = "2015/01/01/2015-01-01-1.json.gz"
+    val run = new Run("2015-01-01 00:00:00", "2015-01-01 02:00:00")
+    write(run.base, h0, Seq(evt("1", 0)))
+    run.pass()
+    write(run.base, h1, Seq(evt("2", 1), evt("3", 1)))
+    val (st, jobs, _) = traced(run.pass())
+    assert(st === Map(h0 -> Status.Imported, h1 -> Status.Imported))
+    // measured 9 jobs: collecting the checkpoint table (1); the hour
+    // file's one read, its lines spread over the cores and materialized
+    // with the validator's verdict observed (2: the shuffle's map stage,
+    // the localCheckpoint); the parse, materialized by the merge's
+    // localCheckpoint with its month set observed (1); the merge's range
+    // exchange (3: the bound sampling, the map stage, the write);
+    // collecting the hour keys to reconcile against (1); the checkpoint
+    // write (1). The pass that validated, then parsed the same file
+    // again, collected the months and inferred both tables' schemas ran 16.
+    assert(jobs.size <= 9, jobs.mkString("\n"))
   }
 }

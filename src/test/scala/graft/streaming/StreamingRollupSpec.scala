@@ -61,4 +61,37 @@ class StreamingRollupSpec extends SparkTestBase {
       .filter(f => f.isDirectory && f.getName.startsWith("state_"))
     assert(gens.length === 1 && gens.head.getName === "state_1")
   }
+
+  test("a crash before a batch's commit marker leaves the last committed " +
+      "generation current; the replayed batch folds onto it") {
+    val stateDir = new java.io.File(
+      java.nio.file.Files.createTempDirectory("rollcrash").toFile, "state").getAbsolutePath
+    val sink = new StreamingRollup.RollupSink(Seq("k"), "v", "u", stateDir)
+    val b1 = Seq(("a", 10.0, 1L), ("b", 5.0, 1L)).toDF("k", "v", "u")
+    val b2 = Seq(("a", 30.0, 2L), ("c", 1.0, 9L)).toDF("k", "v", "u")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "n", "sum_v", "uniq").orderBy("k").collect().toSeq
+    def expected(b: org.apache.spark.sql.DataFrame) =
+      rows(IncrementalRollup.finalizeAggs(IncrementalRollup.partials(b, Seq("k"), "v", "u")))
+    sink.processBatch(b1, batchId = 0L)
+
+    // batch 1 wrote its generation and stopped before committing it; the
+    // generation holds only its own rows, as a fold onto lost history would
+    IncrementalRollup.partials(b2, Seq("k"), "v", "u")
+      .write.parquet(s"$stateDir/state_1")
+    assert(sink.lastBatchId(spark) === 0L)
+    assert(rows(sink.aggregates(spark).get) === expected(b1))
+
+    // the restart re-delivers batch 1: it folds onto generation 0
+    sink.processBatch(b2, batchId = 1L)
+    assert(sink.lastBatchId(spark) === 1L)
+    assert(rows(sink.aggregates(spark).get) === expected(b1.union(b2)))
+    val left = new java.io.File(stateDir).list().filterNot(_.startsWith(".")).sorted.toSeq
+    assert(left === Seq("_commit_1", "state_1"))
+
+    // a crash after a commit, before its cleanup: the newest marker wins
+    new java.io.File(stateDir, "_commit_0").createNewFile()
+    assert(sink.lastBatchId(spark) === 1L)
+    assert(rows(sink.aggregates(spark).get) === expected(b1.union(b2)))
+  }
 }
