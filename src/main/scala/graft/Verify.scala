@@ -11,7 +11,7 @@ object Verify {
     * sum + xor) — so the hash is a pure function of the result SET and
     * two runs compare without materializing either.
     */
-  private def resultHash(df: org.apache.spark.sql.DataFrame): String = {
+  private[graft] def resultHash(df: org.apache.spark.sql.DataFrame): String = {
     import org.apache.spark.sql.functions._
     val cols = df.columns.sorted
       .map(c => coalesce(col(c).cast("string"), lit("\u0000")))

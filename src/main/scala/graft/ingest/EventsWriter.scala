@@ -149,22 +149,18 @@ object EventsWriter {
     } finally Dedup.unpersistCheckpoint(keyedBatch)
   }
 
-  /** Full ingest of hour files into the table (the reference's
-    * per-file import step 7, SURVEY §3.1).
-    */
-  def ingestHours(spark: SparkSession, hourFiles: Seq[String], tablePath: String): Unit =
-    merge(GhEventParser.ingest(spark, hourFiles), tablePath)
-
   /** Compaction — the background-merge analogue of the reference's
     * MergeTree engine (ClickHouse folds small parts continuously;
-    * `OPTIMIZE TABLE` forces it). Hourly appends leave one small file
-    * per batch per month; this rewrites every month partition holding
-    * more than `maxFilesPerMonth` files through the normal write path
-    * (range partitioning + within-file sort), restoring few
-    * well-sorted, row-group-indexed files. Touched months only —
-    * dynamic partition overwrite, like [[merge]]. Uses the Hadoop
-    * FileSystem API, so the same code compacts local dirs, HDFS, or
-    * object stores. Returns the compacted month keys.
+    * `OPTIMIZE TABLE` forces it). Nothing here appends: [[merge]]
+    * overwrites every month it touches, writing one file per range
+    * partition that holds rows of that month. A month thus exceeds
+    * `maxFilesPerMonth` files only when one merge spread it over more
+    * range partitions than that, or when [[write]] appended into it.
+    * This rewrites every such month through [[write]] (range
+    * partitioning + within-file sort). Touched months only — dynamic
+    * partition overwrite, like [[merge]]. Uses the Hadoop FileSystem
+    * API, so the same code compacts local dirs, HDFS, or object stores.
+    * Returns the compacted month keys.
     */
   def compact(spark: SparkSession, path: String,
       maxFilesPerMonth: Int = 8): Seq[Int] = {
@@ -180,133 +176,11 @@ object EventsWriter {
       }
     val toCompact = months.collect { case (m, files) if files > maxFilesPerMonth => m }
     if (toCompact.nonEmpty) {
-      val metaLog = new org.apache.hadoop.fs.Path(p, "_spark_metadata")
-      val hadLog = fs.exists(metaLog)
-      // rail #1 runs BEFORE the rewrite: a failure must leave the
-      // table byte-identical, not half-compacted with a stale log
-      if (hadLog) assertUntouchedMatchLog(fs, p, metaLog, toCompact.toSet)
       val slice = spark.read.parquet(path)
         .filter(col(partitionCol).isin(toCompact: _*))
         .drop(partitionCol) // write() re-derives it from created_at
       write(slice, path, overwritePartitions = true)
-      // A table landed by the STREAMING sink carries a _spark_metadata
-      // commit log, and readers trust the log over the directory
-      // listing — after this rewrite the log would reference deleted
-      // files and every read fails. The read above consumed the log
-      // (so only COMMITTED files entered the rewrite); dropping it now
-      // finalizes the table as a plain parquet directory whose listing
-      // is the truth — the same contract every batch-written table
-      // here uses. Two safety rails around the cut (round-16 ADVICE +
-      // VERDICT #2):
-      //  1. Once the log is gone, directory listing becomes the truth
-      //     for ALL partitions — so before deleting, every partition
-      //     this compaction did NOT rewrite must list exactly the
-      //     log's committed files. An uncommitted orphan from a
-      //     crashed in-flight micro-batch would otherwise silently
-      //     become visible (phantom rows); here it fails loudly with
-      //     the offending paths.
-      //  2. A `_graft_compacted` tombstone marks the table finalized:
-      //     [[graft.streaming.StreamingIngest.ingestAvailable]]
-      //     refuses to start a sink here again, because ANY new
-      //     FileStreamSink log (stale checkpoint or fresh) would hide
-      //     every compacted file from readers. New data streams into a
-      //     fresh side sink (reusing the checkpoint, so only new
-      //     source files are processed) and folds in via [[merge]] —
-      //     ClickHouse's "no concurrent inserts during OPTIMIZE",
-      //     enforced instead of documented.
-      if (hadLog) {
-        fs.delete(metaLog, true)
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, compactionTombstone), true)
-        try out.write(
-          s"log finalized by compact(); months=${toCompact.sorted.mkString(",")}\n"
-            .getBytes("UTF-8"))
-        finally out.close()
-      }
     }
     toCompact.sorted
-  }
-
-  /** Name of the marker compact() leaves after cutting a streaming
-    * sink's `_spark_metadata` log — the finalized-table tombstone the
-    * streaming ingest checks before starting a sink.
-    */
-  val compactionTombstone = "_graft_compacted"
-
-  /** The committed file set of a FileStreamSink metadata log: replay
-    * from the latest `.compact` snapshot (it holds the full set as of
-    * its batch), then apply later per-batch add/delete entries in
-    * batch order. Parsed structurally (version header + one JSON
-    * object per line with `path` and `action` fields) — the log format
-    * Spark's own readers trust.
-    */
-  private def committedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      metaLog: org.apache.hadoop.fs.Path): Set[String] = {
-    val batches = fs.listStatus(metaLog).toSeq.filter(_.isFile)
-      .map(_.getPath).filter(_.getName.matches("\\d+(\\.compact)?"))
-    def id(pp: org.apache.hadoop.fs.Path): Long =
-      pp.getName.stripSuffix(".compact").toLong
-    val latestCompact =
-      batches.filter(_.getName.endsWith(".compact")).sortBy(id).lastOption
-    val replay = latestCompact.toSeq ++
-      batches.filterNot(_.getName.endsWith(".compact"))
-        .filter(b => latestCompact.forall(c => id(b) > id(c)))
-        .sortBy(id)
-    val pathRe = """"path":"([^"]+)"""".r
-    val actRe = """"action":"([^"]+)"""".r
-    val acc = scala.collection.mutable.LinkedHashSet.empty[String]
-    replay.foreach { b =>
-      val in = fs.open(b)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      txt.linesIterator.filter(_.startsWith("{")).foreach { l =>
-        pathRe.findFirstMatchIn(l).map(_.group(1)).foreach { raw =>
-          if (actRe.findFirstMatchIn(l).exists(_.group(1) == "delete"))
-            acc -= raw
-          else acc += raw
-        }
-      }
-    }
-    acc.toSet
-  }
-
-  /** Rail #1 of the log cut: every month partition NOT rewritten by
-    * this compaction must list exactly the files the sink log
-    * committed there. Compared by `month_key=NNNNNN/filename` (scheme-
-    * free), so qualified log URIs and local listings agree.
-    */
-  private def assertUntouchedMatchLog(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      metaLog: org.apache.hadoop.fs.Path, compacted: Set[Int]): Unit = {
-    def key(part: String, file: String) = s"$part/$file"
-    def partOf(uri: String): Option[(String, String)] = {
-      val segs = uri.split('/')
-      if (segs.length < 2) None
-      else Some((segs(segs.length - 2), segs.last))
-    }
-    val committed = committedFiles(fs, metaLog).flatMap(partOf)
-      .collect {
-        case (part, f) if part.startsWith(s"$partitionCol=") &&
-          !compacted.contains(part.stripPrefix(s"$partitionCol=").toInt) =>
-          key(part, f)
-      }
-    val listed = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(s"$partitionCol=") &&
-        !compacted.contains(
-          s.getPath.getName.stripPrefix(s"$partitionCol=").toInt))
-      .flatMap(d => fs.listStatus(d.getPath).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => key(d.getPath.getName, f.getPath.getName)))
-      .toSet
-    if (listed != committed) {
-      val orphans = (listed -- committed).toSeq.sorted
-      val missing = (committed -- listed).toSeq.sorted
-      throw new IllegalStateException(
-        "compact(): untouched partitions disagree with the sink log — " +
-          "cutting it would change visible data. Uncommitted orphans: " +
-          s"${orphans.mkString(", ")}; committed-but-missing: " +
-          s"${missing.mkString(", ")}")
-    }
   }
 }

@@ -25,7 +25,8 @@ import scala.jdk.CollectionConverters._
   * materialize ([[GhEventParser.readLanded]]), and only the lines of
   * files that import are parsed and merged. Reconciliation collects the
   * table's hour keys to the driver and subtracts them there. Both tables
-  * are read with their known schemas, so no job infers one.
+  * are read with their known schemas, so no job infers one. A pass that
+  * changes no status does not rewrite the checkpoint table.
   */
 object Orchestrator {
 
@@ -49,11 +50,17 @@ object Orchestrator {
     * [[saveMeta]] stopped between its two renames); empty when neither
     * exists.
     */
-  def loadMeta(spark: SparkSession, metaPath: String): DataFrame = {
+  def loadMeta(spark: SparkSession, metaPath: String): DataFrame =
+    readMeta(spark, metaPath)._1
+
+  /** [[loadMeta]], and whether the table came from `<meta>` itself. */
+  private def readMeta(spark: SparkSession, metaPath: String): (DataFrame, Boolean) = {
     def read(path: String) =
       try Some(spark.read.schema(metaSchema).parquet(path))
       catch { case _: AnalysisException => None }
-    read(metaPath).orElse(read(metaPath + ".old")).getOrElse(metaFrame(spark, Nil))
+    read(metaPath).map(_ -> true)
+      .orElse(read(metaPath + ".old").map(_ -> false))
+      .getOrElse(metaFrame(spark, Nil) -> false)
   }
 
   /** One Spark write into a sibling temp directory, renamed into place:
@@ -85,8 +92,9 @@ object Orchestrator {
       metaPath: String, startHour: String, endHour: String): DataFrame = {
     // path → (hour_key, status)
     val state = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Int)]
-    loadMeta(spark, metaPath).collect()
-      .foreach(r => state(r.getString(0)) = (r.getLong(1), r.getInt(2)))
+    val (stored, inPlace) = readMeta(spark, metaPath)
+    stored.collect().foreach(r => state(r.getString(0)) = (r.getLong(1), r.getInt(2)))
+    val loaded = state.toMap
     def having(status: Int): Seq[String] =
       state.collect { case (p, (_, `status`)) => p }.toSeq
     def set(paths: Seq[String], status: Int): Unit =
@@ -115,10 +123,9 @@ object Orchestrator {
         set(having(Status.Downloaded).filter(p => uri.get(p).exists(files)), Status.Verified)
 
         // 4. import Verified files (A5–A19): only their lines are parsed.
-        // Then fold small per-batch files back into few sorted ones — the
-        // background-merge step the reference delegates to ClickHouse's
-        // MergeTree engine. Idempotent and a no-op while every month is
-        // under the file limit.
+        // The merge overwrites every month it touches, so files do not
+        // pile up across passes; compact rewrites a month only when this
+        // one merge wrote it as more range partitions than its file limit.
         val toImport = having(Status.Verified)
         if (toImport.nonEmpty) {
           val batch = lines.filter(col("path").isin(toImport.flatMap(uri.get): _*))
@@ -139,8 +146,10 @@ object Orchestrator {
         .fold(keys.toSet)(FilePipeline.absentHours(keys, _))
     set(imported.filter(p => absent(state(p)._1)), Status.Verified)
 
+    // a pass that changed no status leaves `<meta>` as it was; one that
+    // read `<meta>.old` still writes, to put `<meta>` back
     val meta = metaFrame(spark, state.map { case (p, (k, s)) => (p, k, s) })
-    saveMeta(meta, metaPath)
+    if (!inPlace || state.toMap != loaded) saveMeta(meta, metaPath)
     meta
   }
 

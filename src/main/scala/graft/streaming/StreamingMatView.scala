@@ -82,11 +82,14 @@ object StreamingMatView {
     val tmp = tmpPointer(dir)
     val out = f.create(tmp, true)
     try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-    // Overwriting rename, atomic where the filesystem supports it: via
-    // FileContext + Options.Rename.OVERWRITE there is NO delete-then-
-    // rename window in which the pointer is absent. If FileContext is
-    // unavailable for the scheme, fall back to delete+rename — the
-    // lastBatchId tmp fallback still closes that crash window.
+    // Overwriting rename via FileContext + Options.Rename.OVERWRITE. It
+    // is not atomic everywhere: on a filesystem without a native
+    // overwriting rename (the local one included)
+    // AbstractFileSystem.renameInternal deletes the pointer and then
+    // renames, so a crash can leave the pointer absent. The .tmp
+    // fallback in lastBatchId closes that window, and the one of the
+    // explicit delete+rename below, used when FileContext is
+    // unavailable for the scheme.
     try {
       org.apache.hadoop.fs.FileContext
         .getFileContext(tmp.toUri, spark.sparkContext.hadoopConfiguration)

@@ -230,17 +230,17 @@ class OrchestratorSpec extends SparkTestBase {
     val (_, _, importPlans) = traced(run.pass())
     assert(validated(importPlans), "the probe must see the pass's scan of hour files")
 
+    val metaMtime = new File(run.metaPath).lastModified
     val (st, jobs, plans) = traced(run.pass())
     assert(st === Map(h0 -> Status.Imported,
       "2015/01/01/2015-01-01-1.json.gz" -> Status.NeedDownload))
     assert(!validated(plans), "an idle pass read hour files")
-    // measured 3 jobs: collecting the checkpoint table (1), collecting
-    // the events table's hour keys to reconcile against (1) and the one
-    // checkpoint write (1). Before the events table was read with its
-    // known schema and reconciled on the driver, the idle pass ran 6 (a
-    // footer read and a 3-stage anti-join); the DataFrame-join pass
-    // before that ran 13.
-    assert(jobs.size <= 3, jobs.mkString("\n"))
+    assert(new File(run.metaPath).lastModified === metaMtime,
+      "an idle pass rewrote the checkpoint table")
+    // measured 2 jobs: collecting the checkpoint table (1) and collecting
+    // the events table's hour keys to reconcile against (1); no status
+    // changed, so the checkpoint is not rewritten
+    assert(jobs.size <= 2, jobs.mkString("\n"))
   }
 
   test("runOnce: an importing pass runs a bounded number of jobs") {
