@@ -59,7 +59,8 @@ object PipelineQueries {
     * threshold as the corpus grows. Measured at the M=100 deep
     * rehearsal (500k docs): the verify joins flipped to sort-merge and
     * SORTED 11.7 GB of per-pair shingle arrays (wall 6 s → 93 s for
-    * 3.85× the docs). Per-stage attribution (bench.StageProbe) showed
+    * 3.85× the docs). Per-stage attribution (SCALE.md, measured with a
+    * harness last present at commit 3537548) showed
     * the candidate set itself is LINEAR in corpus size — ~235k
     * sub-threshold pairs per 5k-doc copy (the synthetic corpus's tiny
     * word vocabulary gives random doc pairs background Jaccard
@@ -87,7 +88,7 @@ object PipelineQueries {
     *    the hash joins; the SMJ regime additionally sorted it, which
     *    was the measured wall (sort spill of the fat rows).
     *
-    * Measured at M=100 (500k docs, 23.5M candidates, StageProbe):
+    * Measured at M=100 (500k docs, 23.5M candidates, SCALE.md):
     * estimate-driven SMJ 93 s / 13.4 GB sorted; SHUFFLE_HASH with the
     * ARRAY side built 198 s / 39.4 GB (streaming pairs emits each
     * doc's array in random pair order — raw-entropy xxhash64 longs,

@@ -91,8 +91,8 @@ object StreamingQueries {
     // store keeps every key in a JVM hash map, which is exactly the
     // thing that OOMs first when streaming state grows with the corpus
     // (r53's dedup state is one key per distinct event id). The gates
-    // run the same provider a 100-TB deployment would, and the
-    // streaming-mode scale rehearsal measures its state growth.
+    // run the same provider a 100-TB deployment would; SCALE.md's
+    // streaming-mode rehearsal measured its state growth.
     s.conf.set(ProviderConf,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Changelog checkpointing (optimization round 18, guide §1.2 "per-
@@ -153,9 +153,10 @@ object StreamingQueries {
     sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.trim.toInt)
       .filter(_ > 0).getOrElse(8)
 
-  /** Per-gate micro-batch progress of the most recent drain — state
-    * rows/bytes per batch for the scale rehearsal (metrics only;
-    * gates still return plain data).
+  /** Per-gate micro-batch progress of the most recent drain: batch
+    * input rows and state rows/bytes, read by the r62 and r66–r68
+    * gates and by the streaming specs (metrics only; gates still
+    * return plain data).
     */
   @volatile private[graft] var progressByGate:
       Map[String, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]] =

@@ -105,17 +105,9 @@ class ChTtlSpec extends SparkTestBase {
       java.sql.Timestamp.valueOf(f"2024-01-$d%02d $h%02d:00:00"),
       20240100 + d)
     rows.toDF("id", "ts", "day_key").write.mode("append").insertInto(name)
-    val im = new graft.bench.ScaleRehearsal.InputMeter
-    spark.sparkContext.addSparkListener(im)
-    val read = try {
-      org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-      val r0 = im.records
-      val (dropped, rewritten) =
-        ChTtl.applyTtl(spark, name, "ts", "2 DAY", "2024-01-19 12:00:00")
-      assert(dropped === 7 && rewritten === 1, s"($dropped, $rewritten)")
-      org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-      im.records - r0
-    } finally spark.sparkContext.removeSparkListener(im)
+    val ((dropped, rewritten), read) = inputRecords(
+      ChTtl.applyTtl(spark, name, "ts", "2 DAY", "2024-01-19 12:00:00"))
+    assert(dropped === 7 && rewritten === 1, s"($dropped, $rewritten)")
     // accounting: the stats pass reads every row's ts once (1000);
     // the restricted rewrite reads the boundary day's 100 rows to
     // stage, its 50 staged survivors to insert, and 50 again for the

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.ingest.FilePipeline
+import graft.ingest.{EventsWriter, FilePipeline}
 import graft.ingest.FilePipeline.Status
 import java.io.{File, FileOutputStream}
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -244,23 +244,35 @@ class OrchestratorSpec extends SparkTestBase {
   }
 
   test("runOnce: an importing pass runs a bounded number of jobs") {
-    val h0 = "2015/01/01/2015-01-01-0.json.gz"
-    val h1 = "2015/01/01/2015-01-01-1.json.gz"
-    val run = new Run("2015-01-01 00:00:00", "2015-01-01 02:00:00")
-    write(run.base, h0, Seq(evt("1", 0)))
+    def hour(h: Int) = f"2015/01/01/2015-01-01-$h.json.gz"
+    val run = new Run("2015-01-01 00:00:00", "2015-01-01 04:00:00")
+    write(run.base, hour(0), Seq(evt("1", 0)))
     run.pass()
-    write(run.base, h1, Seq(evt("2", 1), evt("3", 1)))
-    val (st, jobs, _) = traced(run.pass())
-    assert(st === Map(h0 -> Status.Imported, h1 -> Status.Imported))
-    // measured 9 jobs: collecting the checkpoint table (1); the hour
-    // file's one read, its lines spread over the cores and materialized
-    // with the validator's verdict observed (2: the shuffle's map stage,
-    // the localCheckpoint); the parse, materialized by the merge's
-    // localCheckpoint with its month set observed (1); the merge's range
-    // exchange (3: the bound sampling, the map stage, the write);
-    // collecting the hour keys to reconcile against (1); the checkpoint
-    // write (1). The pass that validated, then parsed the same file
-    // again, collected the months and inferred both tables' schemas ran 16.
-    assert(jobs.size <= 9, jobs.mkString("\n"))
+    val month = new File(run.table, s"${EventsWriter.partitionCol}=201501")
+    // three more hours land one pass at a time into the same month
+    val jobCounts = (1 to 3).map { h =>
+      write(run.base, hour(h), Seq(evt(s"${10 * h}", h), evt(s"${10 * h + 1}", h)))
+      val (st, jobs, _) = traced(run.pass())
+      assert(st === (0 to 3).map(i =>
+        hour(i) -> (if (i <= h) Status.Imported else Status.NeedDownload)).toMap)
+      // measured 9 jobs a pass: collecting the checkpoint table (1); the hour
+      // file's one read, its lines spread over the cores and materialized
+      // with the validator's verdict observed (2: the shuffle's map stage,
+      // the localCheckpoint); the parse, materialized by the merge's
+      // localCheckpoint with its month set observed (1); the merge's range
+      // exchange (3: the bound sampling, the map stage, the write);
+      // collecting the hour keys to reconcile against (1); the checkpoint
+      // write (1). The pass that validated, then parsed the same file
+      // again, collected the months and inferred both tables' schemas ran 16.
+      assert(jobs.size <= 9, jobs.mkString("\n"))
+      // the merge overwrites the month, so its files do not pile up;
+      // 8 is `EventsWriter.compact`'s default `maxFilesPerMonth`
+      val files = month.listFiles.count(_.getName.endsWith(".parquet"))
+      assert(files <= 8, s"month holds $files files after hour $h")
+      jobs.size
+    }
+    // a pass costs the same number of jobs late in the month as early
+    assert(jobCounts.distinct.size === 1, jobCounts)
+    assert(run.rows === 7L)
   }
 }

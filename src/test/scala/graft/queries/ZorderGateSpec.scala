@@ -22,32 +22,25 @@ class ZorderGateSpec extends SparkTestBase {
     val b = graft.Tables.load(spark, dir, "events")
       .agg(max("user_id"), min("event_id")).first()
     val (pu, eHi) = (b.getLong(0), b.getLong(1) + 999L)
-    val im = new graft.bench.ScaleRehearsal.InputMeter
-    spark.sparkContext.addSparkListener(im)
-    try {
-      def metered(pred: org.apache.spark.sql.Column): Long = {
-        org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-        val r0 = im.records
-        val rows = spark.read.parquet(path).filter(pred)
-          .agg(count(lit(1)).as("n")).first().getLong(0)
-        assert(rows > 0, "vacuous probe — the bound would hold trivially")
-        org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-        im.records - r0
-      }
-      // bound = 60%: at 32 files the z-curve bounds each probe to the
-      // files whose box admits it (~1/√32 of the span per dimension in
-      // the balanced case — measured ~20-40% at sf0.01 including the
-      // box-edge overlap); 60% holds headroom for data-shape drift
-      // while still failing hard if clustering is lost (a probe over
-      // an unclustered layout decodes ~100%)
-      val uRows = metered(col("user_id") === pu)
-      assert(uRows.toDouble < total * 0.6,
-        s"user-point probe decoded $uRows of $total rows — the " +
-          "z-order layout is not pruning on user_id")
-      val eRows = metered(col("event_id") <= eHi)
-      assert(eRows.toDouble < total * 0.6,
-        s"event-range probe decoded $eRows of $total rows — the " +
-          "z-order layout is not pruning on event_id")
-    } finally spark.sparkContext.removeSparkListener(im)
+    def metered(pred: org.apache.spark.sql.Column): Long = {
+      val (rows, read) = inputRecords(spark.read.parquet(path).filter(pred)
+        .agg(count(lit(1)).as("n")).first().getLong(0))
+      assert(rows > 0, "vacuous probe — the bound would hold trivially")
+      read
+    }
+    // bound = 60%: at 32 files the z-curve bounds each probe to the
+    // files whose box admits it (~1/√32 of the span per dimension in
+    // the balanced case — measured ~20-40% at sf0.01 including the
+    // box-edge overlap); 60% holds headroom for data-shape drift
+    // while still failing hard if clustering is lost (a probe over
+    // an unclustered layout decodes ~100%)
+    val uRows = metered(col("user_id") === pu)
+    assert(uRows.toDouble < total * 0.6,
+      s"user-point probe decoded $uRows of $total rows — the " +
+        "z-order layout is not pruning on user_id")
+    val eRows = metered(col("event_id") <= eHi)
+    assert(eRows.toDouble < total * 0.6,
+      s"event-range probe decoded $eRows of $total rows — the " +
+        "z-order layout is not pruning on event_id")
   }
 }

@@ -144,6 +144,28 @@ class HttpServeSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("Serve.start: /status reads <meta>.old when a pass stopped between " +
+      "the checkpoint's two renames") {
+    import spark.implicits._
+    import graft.ingest.FilePipeline.Status._
+    val dir = java.nio.file.Files.createTempDirectory("serve").toFile
+    val metaPath = new java.io.File(dir, "meta").getAbsolutePath
+    // only `<meta>.old` on disk: `<meta>` was renamed away, the new
+    // table not yet renamed into place
+    Seq(("2015/01/01/2015-01-01-0.json.gz", 0L, Imported),
+      ("2015/01/01/2015-01-01-1.json.gz", 1L, Imported),
+      ("2015/01/01/2015-01-01-2.json.gz", 2L, NeedDownload))
+      .toDF("path", "hour_key", "status").write.parquet(metaPath + ".old")
+    val srv = Serve.start(spark, new java.io.File(dir, "tables").getAbsolutePath,
+      Some(metaPath), 0)
+    try {
+      val (code, body) = get(srv.boundPort, "/status")
+      assert(code === 200, body)
+      assert(body.contains(""""total":3""") && body.contains(""""imported":2"""), body)
+      assert(body.contains(""""missingArr":["2015-01-01-2.json.gz"]"""), body)
+    } finally srv.stop()
+  }
+
   test("POST /query accepts the CH data-bearing INSERT protocol") {
     spark.sql("DROP TABLE IF EXISTS serve_ins")
     org.apache.commons.io.FileUtils.deleteQuietly(
