@@ -53,6 +53,9 @@ object Bench {
   private val ProbeRef = 0.82
 
   def main(args: Array[String]): Unit = {
+    // optional args = subset of query names to run (dev iteration);
+    // the driver passes none and gets the full suite
+    val selected = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(cpus).getOrCreate()
@@ -73,11 +76,6 @@ object Bench {
     // that reproducibly runs in 8 s because a >60 s first pass used to skip
     // the retry). If the two passes still disagree by >3× the run was noisy
     // on both sides of the spike, so take one more sample; min of all.
-    // optional args = subset of query names to run (dev iteration);
-    // the driver passes none and gets the full suite
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => args.contains(k) }
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Mid-suite probe samples (round-16 VERDICT #5): the before/after
@@ -94,9 +92,9 @@ object Bench {
     // ~150 s suite.
     val probeMids = scala.collection.mutable.ArrayBuffer.empty[Double]
     def suitePass(): Unit = {
-      val ordered = selected.toSeq.sortBy(_._1)
+      val ordered = selected.sortBy(_.name)
       val midAts = Set(ordered.size / 3, 2 * ordered.size / 3)
-      ordered.zipWithIndex.foreach { case ((name, fn), idx) =>
+      ordered.zipWithIndex.foreach { case (SparkEntry.Gate(name, fn, _), idx) =>
         if (midAts(idx) && ordered.size >= 8)
           probeMids += calibrationProbe(spark)
         def once(): Option[Double] = {

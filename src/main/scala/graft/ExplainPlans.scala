@@ -16,7 +16,7 @@ object ExplainPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val only = args.drop(2).toSet
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val spark = GraftSession.getOrCreate("8")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
@@ -37,9 +37,7 @@ object ExplainPlans {
     def compactPlan(plan: String): String =
       "0x[0-9A-Fa-f]{64,}".r.replaceAllIn(plan,
         m => s"0x…<${(m.matched.length - 2) / 2} bytes>")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.sortBy(_.name).foreach { case SparkEntry.Gate(name, fn, _) =>
       graft.queries.PipelineQueries.stagePlans.clear()
       val plan =
         try fn(spark, sfDir).queryExecution.explainString(

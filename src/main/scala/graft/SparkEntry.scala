@@ -15,8 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `p*`  — composed pipelines (lang → quality → dedup in one plan)
   *  - `m*`  — multimodal binary-column plumbing
   *
-  * Every `queries` entry has an `oracleSql` row: the two maps hold the
-  * same keys.
+  * Each gate is declared once, in [[gates]], with its engine function
+  * and the DuckDB oracle SQL its result is checked against. Names are
+  * distinct (checked when the registry is built); `queries` and
+  * `oracleSql` are views over it.
   */
 object SparkEntry {
 
@@ -26,200 +28,37 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RefQueries.activity(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r01_count" -> (RefQueries.count_star _),
-    "r02_filter_project" -> (RefQueries.filter_project _),
-    "r03_topk_json" -> (RefQueries.topk_json_key _),
-    "r04_group_agg" -> (RefQueries.group_agg _),
-    "r05_arg_min_max" -> (RefQueries.arg_min_max _),
-    "r06_activity" -> (RefQueries.activity _),
-    "r07_status_anti_join" -> (RefQueries.status_anti_join _),
-    "r08_watermarks" -> (RefQueries.watermarks _),
-    "r09_dedup_replacing" -> (RefQueries.dedup_replacing _),
-    "r10_month_rollup" -> (RefQueries.month_rollup _),
-    "r11_tpch_q1" -> (RefQueries.tpch_q1 _),
-    "r12_tpch_q3" -> (RefQueries.tpch_q3 _),
-    "r13_dim_join" -> (RefQueries.dim_join _),
-    "r14_ch_sql" -> (RefQueries.ch_sql_passthrough _),
-    "r15_ch_sql_arrayjoin" -> (RefQueries.ch_sql_arrayjoin _),
-    "r16_db_schema" -> (RefQueries.db_schema _),
-    "r17_param" -> (RefQueries.param_query _),
-    "r18_sessionize" -> (RefQueries.sessionize _),
-    "r20_quantiles" -> (RefQueries.quantiles _),
-    "r21_rollup" -> (RefQueries.rollup_subtotals _),
-    "r22_window_rank" -> (RefQueries.window_rank _),
-    "r23_asof" -> (RefQueries.asof_join _),
-    "r24_range_join" -> (RefQueries.range_join _),
-    "r25_ch_dialect" -> (RefQueries.ch_sql_dialect _),
-    "r26_uniq_sketch" -> (RefQueries.uniq_sketch _),
-    "r27_ch_curried" -> (RefQueries.ch_sql_curried _),
-    "r28_bloom_semijoin" -> (RefQueries.bloom_semijoin _),
-    "r29_funnel" -> (RefQueries.funnel _),
-    "r30_incr_rollup" -> (RefQueries.incremental_rollup _),
-    "r31_sequence_match" -> (RefQueries.sequence_match _),
-    "r32_moving_avg" -> (RefQueries.moving_avg _),
-    "r34_cube" -> (RefQueries.cube_agg _),
-    "r35_ch_final" -> (RefQueries.ch_final _),
-    "r37_salted_skew" -> (RefQueries.salted_skew_agg _),
-    "r38_ch_prewhere" -> (RefQueries.ch_prewhere _),
-    "r39_ch_totals" -> (RefQueries.ch_totals _),
-    "r40_ch_array_join" -> (RefQueries.ch_array_join _),
-    "r41_ch_stats" -> (RefQueries.ch_stats _),
-    "r42_ch_numbers" -> (RefQueries.ch_numbers_spine _),
-    "r43_ch_dict" -> (RefQueries.ch_dict _),
-    "r44_ch_fill" -> (RefQueries.ch_with_fill _),
-    "r45_ch_summap" -> (RefQueries.ch_summap _),
-    "r36_ch_limit_by" -> (RefQueries.ch_limit_by _),
-    "r46_ch_asof" -> (RefQueries.ch_asof _),
-    "r47_ch_mutation" -> (RefQueries.ch_mutation _),
-    "r48_ch_matview" -> (RefQueries.ch_matview _),
-    "r49_ch_funnel" -> (RefQueries.ch_funnel_sql _),
-    "r50_ch_dialect_tail" -> (RefQueries.ch_dialect_tail _),
-    "r51_ch_json" -> (RefQueries.ch_json _),
-    "r52_stream_window" -> (StreamingQueries.stream_window _),
-    "r53_stream_dedup" -> (StreamingQueries.stream_dedup _),
-    "r54_stream_join" -> (StreamingQueries.stream_join _),
-    "r55_stream_sessionize" -> (StreamingQueries.stream_sessionize _),
-    "r56_stream_enrich" -> (StreamingQueries.stream_enrich _),
-    "r57_stream_topk" -> (StreamingQueries.stream_topk _),
-    "r58_stream_ann_ingest" -> (StreamingQueries.stream_ann_ingest _),
-    "r59_stream_decontam" -> (StreamingQueries.stream_decontam _),
-    "r60_stream_neardup" -> (StreamingQueries.stream_neardup _),
-    "r61_orc_roundtrip" -> (RefQueries.orc_roundtrip _),
-    "r62_stream_recovery" -> (StreamingQueries.stream_recovery _),
-    "r63_stream_watermark_dedup" -> (StreamingQueries.stream_watermark_dedup _),
-    "r64_stream_theta" -> (StreamingQueries.stream_theta_overlap _),
-    "r65_stream_theta_recovery" -> (StreamingQueries.stream_theta_recovery _),
-    "r66_stream_concat_chunk" -> (StreamingQueries.stream_concat_chunk _),
-    "r67_stream_state_recovery" -> (StreamingQueries.stream_concat_chunk_recovery _),
-    "r68_stream_interleave" -> (StreamingQueries.stream_interleave_recovery _),
-    "r33_set_ops" -> (RefQueries.set_ops _),
-    "r19_retention" -> (RefQueries.retention _),
-    "g01_graph_nodes" -> (RefQueries.graph_nodes _),
-    "g02_graph_edges" -> (RefQueries.graph_edges _),
-    "g03_degree_topk" -> (RefQueries.graph_degree_topk _),
-    "g04_pagerank" -> (RefQueries.graph_pagerank _),
-    "g05_triangles" -> (PipelineQueries.neardup_triangles _),
-    "g06_label_prop" -> (PipelineQueries.label_prop _),
-    "d01_exact_dedup" -> (PipelineQueries.exact_dedup _),
-    "d02_minhash_lsh" -> (PipelineQueries.minhash_lsh_dedup _),
-    "d03_simhash" -> (PipelineQueries.simhash_dedup _),
-    "d04_jaccard_pairs" -> (PipelineQueries.jaccard_pairs _),
-    "d05_embedding_neardup" -> (PipelineQueries.embedding_neardup _),
-    "d06_containment" -> (PipelineQueries.containment_pairs _),
-    "d07_decontaminate" -> (PipelineQueries.decontaminate _),
-    "d08_url_dedup" -> (PipelineQueries.url_dedup _),
-    "d09_semantic_dedup" -> (PipelineQueries.semantic_dedup _),
-    "d10_dup_passages" -> (PipelineQueries.dup_passages _),
-    "d11_keep_best" -> (PipelineQueries.neardup_keep_best _),
-    "p01_clean_corpus" -> (PipelineQueries.clean_corpus _),
-    "p02_neardup_groups" -> (PipelineQueries.neardup_groups _),
-    "p03_shard_pack" -> (PipelineQueries.shard_pack _),
-    "p04_source_mix" -> (PipelineQueries.source_mix _),
-    "p15_shard_manifest" -> (PipelineQueries.shard_manifest _),
-    "p16_concat_chunk" -> (PipelineQueries.concat_chunk _),
-    "t24_dsir_weights" -> (PipelineQueries.dsir_weights _),
-    "p17_epoch_interleave" -> (PipelineQueries.epoch_interleave _),
-    "p18_lee_pipeline" -> (PipelineQueries.lee_pipeline _),
-    "p19_concat_chunk_scale" -> (PipelineQueries.concat_chunk_scale _),
-    "p20_compaction" -> (PipelineQueries.compaction_manifest _),
-    "p21_compact_split" -> (PipelineQueries.compaction_split_manifest _),
-    "t27_perceptron_quality" -> (PipelineQueries.perceptron_quality _),
-    "t28_perceptron_eval" -> (PipelineQueries.perceptron_eval _),
-    "t29_classifier_gate" -> (PipelineQueries.classifier_gated_corpus _),
-    "t30_bpe_compression_large" -> (PipelineQueries.bpe_compression_large _),
-    "r69_bucketed_activity" -> (RefQueries.bucketed_activity _),
-    "r70_bucketed_join" -> (RefQueries.bucketed_join _),
-    "r71_bucketed_final" -> (RefQueries.ch_final_bucketed _),
-    "r72_bucketed_mutation" -> (RefQueries.bucketed_mutation _),
-    "r73_zorder_probe" -> (RefQueries.zorder_probe _),
-    "r74_part_bucketed" -> (RefQueries.part_bucketed_rollup _),
-    "r75_ch_ttl" -> (RefQueries.ch_ttl _),
-    "r76_ttl_ddl" -> (RefQueries.ch_ttl_ddl _),
-    "r77_system_parts" -> (RefQueries.system_parts _),
-    "r78_delete_from" -> (RefQueries.ch_delete_from _),
-    "r79_projection" -> (RefQueries.ch_projection _),
-    "r80_in_partition" -> (RefQueries.ch_in_partition _),
-    "r81_projection_auto" -> (RefQueries.ch_projection_auto _),
-    "p05_zorder_key" -> (PipelineQueries.zorder_key _),
-    "p06_boilerplate" -> (PipelineQueries.boilerplate_clean _),
-    "p07_temperature_mix" -> (PipelineQueries.temperature_mix _),
-    "p14_quality_budget" -> (PipelineQueries.quality_budget _),
-    "p08_curriculum" -> (PipelineQueries.curriculum _),
-    "p09_chunking" -> (PipelineQueries.chunk_docs _),
-    "p10_pipeline" -> (PipelineQueries.pipeline_end_to_end _),
-    "p11_curriculum_scale" -> (PipelineQueries.curriculum_scale _),
-    "p12_soft_dedup" -> (PipelineQueries.soft_dedup _),
-    "t15_cdc_chunks" -> (PipelineQueries.cdc_chunks _),
-    "d12_cdc_dup_chunks" -> (PipelineQueries.cdc_dup_chunks _),
-    "d13_oph_lsh" -> (PipelineQueries.oph_lsh_dedup _),
-    "g07_kcore" -> (PipelineQueries.kcore _),
-    "s01_ann_topk" -> (PipelineQueries.ann_topk _),
-    "s02_ann_ivf" -> (PipelineQueries.ann_ivf _),
-    "s03_ann_ivf_kmeans" -> (PipelineQueries.ann_ivf_kmeans _),
-    "s04_pq_codes" -> (PipelineQueries.pq_codes _),
-    "s05_pq_adc" -> (PipelineQueries.pq_adc _),
-    "s06_ann_recall" -> (PipelineQueries.ann_recall _),
-    "s07_ivf_pq" -> (PipelineQueries.pq_ivf_adc _),
-    "s08_ann_lsh" -> (PipelineQueries.ann_lsh _),
-    "s09_ann_rerank" -> (PipelineQueries.pq_ivf_rerank _),
-    "s10_sq8_topk" -> (PipelineQueries.sq8_topk _),
-    "s11_knn_graph" -> (PipelineQueries.knn_graph _),
-    "s13_filtered_ann" -> (PipelineQueries.filtered_ann _),
-    "s14_filtered_ann_post" -> (PipelineQueries.filtered_ann_post _),
-    "s15_ann_multiprobe" -> (PipelineQueries.ann_multiprobe _),
-    "s16_multiprobe_recall" -> (PipelineQueries.multiprobe_recall _),
-    "s12_mmr_rerank" -> (PipelineQueries.mmr_rerank _),
-    "t01_lang_id" -> (PipelineQueries.lang_id _),
-    "t02_quality_score" -> (PipelineQueries.quality_score _),
-    "t03_token_count" -> (PipelineQueries.token_count _),
-    "t04_fingerprint" -> (PipelineQueries.fingerprint _),
-    "t05_sql_surface" -> (PipelineQueries.sql_surface _),
-    "t06_vocab" -> (PipelineQueries.vocab _),
-    "t07_tfidf" -> (PipelineQueries.tfidf _),
-    "t08_repetition" -> (PipelineQueries.repetition _),
-    "t09_topk_sketch" -> (PipelineQueries.topk_sketch _),
-    "t10_kll_bound" -> (PipelineQueries.kll_bound _),
-    "t11_pii_scrub" -> (PipelineQueries.pii_scrub _),
-    "t12_lm_score" -> (PipelineQueries.lm_score _),
-    "t13_bigram_lm" -> (PipelineQueries.bigram_lm _),
-    "t14_bpe_pairs" -> (PipelineQueries.bpe_pairs _),
-    "t21_bpe_merges" -> (PipelineQueries.bpe_merges _),
-    "t22_source_overlap" -> (PipelineQueries.source_overlap _),
-    "t23_bpe_encode" -> (PipelineQueries.bpe_encode _),
-    "t25_bpe_compression" -> (PipelineQueries.bpe_compression _),
-    "t26_bpe_encode_large" -> (PipelineQueries.bpe_encode_large _),
-    "t16_token_entropy" -> (PipelineQueries.token_entropy _),
-    "t17_cms_estimate" -> (PipelineQueries.cms_estimate _),
-    "t18_contamination_density" -> (PipelineQueries.contamination_density _),
-    "t20_memorization_spans" -> (PipelineQueries.memorization_spans _),
-    "t19_js_divergence" -> (PipelineQueries.js_divergence _),
-    "d14_bloom_prefilter" -> (PipelineQueries.bloom_prefilter _),
-    "d15_incremental_neardup" -> (PipelineQueries.incremental_neardup _),
-    "d16_stop_shingle" -> (PipelineQueries.stop_shingle_neardup _),
-    "d17_edit_distance" -> (PipelineQueries.edit_distance_neardup _),
-    "d18_edit_blocked" -> (PipelineQueries.edit_distance_blocked _),
-    "d19_exact_substrings" -> (PipelineQueries.exact_substrings _),
-    "d20_exact_substr_cut" -> (PipelineQueries.exact_substr_cut _),
-    "p13_group_split" -> (PipelineQueries.group_split _),
-    "g08_twohop" -> (PipelineQueries.twohop _),
-    "g11_twohop_guarded" -> (PipelineQueries.twohop_guarded _),
-    "g12_incremental_cc" -> (PipelineQueries.incremental_components _),
-    "g09_modularity" -> (PipelineQueries.modularity _),
-    "g10_cluster_histogram" -> (PipelineQueries.cluster_histogram _),
-    "m01_multimodal_meta" -> (PipelineQueries.multimodal_meta _),
-    "m02_frame_sample" -> (PipelineQueries.multimodal_frames _),
-    "m05_image_pixels" -> (PipelineQueries.multimodal_pixels _),
-    "m06_y4m_frames" -> (PipelineQueries.multimodal_y4m _),
-    "m07_image_dedup" -> (PipelineQueries.multimodal_image_dedup _),
-    "m03_audio_meta" -> (PipelineQueries.multimodal_audio _),
-    "m04_video_meta" -> (PipelineQueries.multimodal_video _),
-    "m08_audio_features" -> (PipelineQueries.multimodal_audio_features _),
-    "m09_scene_cuts" -> (PipelineQueries.multimodal_scenes _),
-    "m10_silence_runs" -> (PipelineQueries.multimodal_silence _),
-    "m11_resize" -> (PipelineQueries.multimodal_resize _),
-    "m12_phash_dedup" -> (PipelineQueries.multimodal_phash_dedup _),
-  )
+  /** One oracle-checked gate: `run(spark, sfDir)` builds its result, and
+    * `oracleSql` computes the same result in DuckDB over the SF's parquet.
+    */
+  final case class Gate(name: String, run: (SparkSession, String) => DataFrame,
+      oracleSql: String)
+
+  /** The registry as declared; a repeated name fails here instead of
+    * silently replacing an earlier entry, as a `Map` literal would.
+    */
+  private[graft] def registry(gates: Gate*): Seq[Gate] = {
+    val repeated = gates.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }
+    require(repeated.isEmpty,
+      s"gate names declared more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    gates
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.run).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    gates.map(g => g.name -> g.oracleSql).toMap
+
+  /** The gates named, in registry order; every gate when `names` is
+    * empty. A name not in the registry throws, so a typo cannot select
+    * nothing.
+    */
+  def select(names: Seq[String]): Seq[Gate] = {
+    val unknown = names.filterNot(queries.contains).distinct
+    require(unknown.isEmpty, s"unknown gate names: ${unknown.mkString(", ")}")
+    if (names.isEmpty) gates else gates.filter(g => names.contains(g.name))
+  }
 
   /** The k-round BPE greedy-merge CTE chain shared by the t21/t23
     * oracles — generated, because the engine now trains
@@ -390,47 +229,50 @@ object SparkEntry {
          FROM toks t JOIN dict d USING (w)
          GROUP BY t.doc_id ORDER BY t.doc_id"""))
 
-  def oracleSql: Map[String, String] = Map(
-    "r01_count" -> "SELECT count(*) AS cnt FROM events",
+  /** Every oracle-checked gate, each next to its oracle and the notes
+    * on how that oracle reproduces the engine's answer.
+    */
+  lazy val gates: Seq[Gate] = registry(
+    Gate("r01_count", RefQueries.count_star, "SELECT count(*) AS cnt FROM events"),
 
-    "r02_filter_project" ->
+    Gate("r02_filter_project", RefQueries.filter_project,
       """SELECT event_id, user_id, value AS amount FROM events
-         WHERE event_type='purchase' AND value>100.0 ORDER BY event_id""",
+         WHERE event_type='purchase' AND value>100.0 ORDER BY event_id"""),
 
-    "r03_topk_json" ->
+    Gate("r03_topk_json", RefQueries.topk_json_key,
       """SELECT CAST(json_extract_string(props,'$.k') AS INTEGER) AS k,
                 count(*) AS cnt
          FROM events WHERE event_type='purchase' OR event_type='click'
-         GROUP BY k ORDER BY cnt DESC, k LIMIT 20""",
+         GROUP BY k ORDER BY cnt DESC, k LIMIT 20"""),
 
-    "r04_group_agg" ->
+    Gate("r04_group_agg", RefQueries.group_agg,
       """SELECT event_type, count(*) AS cnt, min(ts) AS min_ts,
                 CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
 
-    "r05_arg_min_max" ->
+    Gate("r05_arg_min_max", RefQueries.arg_min_max,
       """SELECT event_type, arg_min(event_id, ts) AS first_id,
                 arg_max(event_id, ts) AS last_id, count(*) AS cnt
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
 
-    "r06_activity" -> activityOracleSql,
+    Gate("r06_activity", RefQueries.activity, activityOracleSql),
 
     // r69: the SAME expectation as r06 — the bucketed catalog layout
     // must be answer-invariant; the plan difference (bucketed scan,
     // zero hash exchanges) is pinned by PlanContractSpec
-    "r69_bucketed_activity" -> activityOracleSql,
+    Gate("r69_bucketed_activity", RefQueries.bucketed_activity, activityOracleSql),
 
     // r70: user-grain fact-to-dim join, both sides bucketed on the
     // engine side; the oracle recomputes dim + join from the original
     // parquet, so any row lost/duplicated by the co-located plan
     // breaks the hash
-    "r70_bucketed_join" ->
+    Gate("r70_bucketed_join", RefQueries.bucketed_join,
       """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
              max(value) AS max_v
            FROM events GROUP BY 1)
          SELECT e.event_id, e.user_id, u.n_events, u.max_v
          FROM events e JOIN u USING (user_id)
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
 
     // r72: r70's join over the fact table AFTER the r47 mutation pair
     // (DELETE 'error', double value of big purchases) ran against the
@@ -440,7 +282,7 @@ object SparkEntry {
     // mutation result and that the bucket-preserving rewrite lost no
     // rows; the preserved zero-exchange plan is pinned by
     // PlanContractSpec
-    "r72_bucketed_mutation" ->
+    Gate("r72_bucketed_mutation", RefQueries.bucketed_mutation,
       """WITH m AS (SELECT event_id, user_id, event_type,
              CASE WHEN event_type = 'purchase' AND value > 50
                   THEN value * 2 ELSE value END AS value
@@ -451,14 +293,14 @@ object SparkEntry {
          SELECT m.event_id, m.user_id, m.event_type, m.value,
                 u.n_events, u.max_v
          FROM m JOIN u USING (user_id)
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
 
     // r74: the full MergeTree layout analogue (day partitions +
     // user buckets on one table) must be answer-invariant — the
     // oracle replays the day slice + rollup from the original
     // parquet; PartitionFilters + Bucketed + zero-exchange pinned by
     // PlanContractSpec
-    "r74_part_bucketed" ->
+    Gate("r74_part_bucketed", RefQueries.part_bucketed_rollup,
       """SELECT user_id, n, sv, max_id FROM (
            SELECT user_id, CAST(count(*) AS BIGINT) AS n,
                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv,
@@ -466,13 +308,13 @@ object SparkEntry {
            FROM events
            WHERE CAST(strftime(ts, '%Y%m%d') AS INT) = 20240115
            GROUP BY user_id)
-         ORDER BY n DESC, user_id LIMIT 20""",
+         ORDER BY n DESC, user_id LIMIT 20"""),
 
     // r75: TTL as of 2024-01-31 12:00 with INTERVAL 16 DAY — the
     // oracle keeps exactly the rows past the noon cutoff, so the
     // partition-drop fast path, the boundary rewrite, and the
     // untouched tail must compose to precisely this survivor set
-    "r75_ch_ttl" ->
+    Gate("r75_ch_ttl", RefQueries.ch_ttl,
       """SELECT day_key, n, sv, min_id, max_id FROM (
            SELECT CAST(strftime(ts, '%Y%m%d') AS INT) AS day_key,
                   CAST(count(*) AS BIGINT) AS n,
@@ -481,12 +323,12 @@ object SparkEntry {
            FROM events
            WHERE ts >= TIMESTAMP '2024-01-15 12:00:00'
            GROUP BY 1)
-         ORDER BY day_key""",
+         ORDER BY day_key"""),
 
     // r76: the SAME survivor expectation as r75 — the statement-surface
     // path (CH-verbatim TTL DDL + MATERIALIZE TTL) must land exactly
     // where the Scala-API path lands
-    "r76_ttl_ddl" ->
+    Gate("r76_ttl_ddl", RefQueries.ch_ttl_ddl,
       """SELECT day_key, n, sv, min_id, max_id FROM (
            SELECT CAST(strftime(ts, '%Y%m%d') AS INT) AS day_key,
                   CAST(count(*) AS BIGINT) AS n,
@@ -495,58 +337,58 @@ object SparkEntry {
            FROM events
            WHERE ts >= TIMESTAMP '2024-01-15 12:00:00'
            GROUP BY 1)
-         ORDER BY day_key""",
+         ORDER BY day_key"""),
 
     // r77: system.parts row accounting for the r74 layout table — one
     // part per day partition; the oracle is the day histogram of the
     // original parquet (bytes_on_disk / file_count are FS facts,
     // pinned by SystemPartsSpec instead)
-    "r77_system_parts" ->
+    Gate("r77_system_parts", RefQueries.system_parts,
       """SELECT CAST(CAST(strftime(ts, '%Y%m%d') AS INT) AS VARCHAR)
                   AS "partition",
                 CAST(count(*) AS BIGINT) AS rows
-         FROM events GROUP BY 1 ORDER BY "partition"""",
+         FROM events GROUP BY 1 ORDER BY "partition""""),
 
     // r78: lightweight DELETE's end state stated declaratively — rows
     // where the condition held are gone, everything else intact
-    "r78_delete_from" ->
+    Gate("r78_delete_from", RefQueries.ch_delete_from,
       """SELECT event_id, user_id, event_type, value FROM events
          WHERE NOT (event_type = 'error' OR value > 150)
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
 
     // r80: IN PARTITION scoping — only purchase values double (the
     // predicate alone matches every type) and only error rows vanish
-    "r80_in_partition" ->
+    Gate("r80_in_partition", RefQueries.ch_in_partition,
       """SELECT event_id, user_id, event_type,
                 CASE WHEN event_type = 'purchase' AND value > 50
                      THEN value * 2 ELSE value END AS value
          FROM events WHERE event_type <> 'error'
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
 
     // r81: the AUTOMATIC projection rewrite must be answer-invariant —
     // same rollup expectation, computed from the original parquet; the
     // plan swap itself is require()d inside the gate
-    "r81_projection_auto" ->
+    Gate("r81_projection_auto", RefQueries.ch_projection_auto,
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv,
                 max(event_id) AS max_id
-         FROM events GROUP BY user_id ORDER BY user_id""",
+         FROM events GROUP BY user_id ORDER BY user_id"""),
 
     // r79: a materialized projection must answer exactly what the base
     // table would — the oracle recomputes the per-user rollup from the
     // original parquet
-    "r79_projection" ->
+    Gate("r79_projection", RefQueries.ch_projection,
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
                 CAST(count(*) FILTER (WHERE event_type = 'purchase')
                   AS BIGINT) AS purchases,
                 CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv,
                 max(event_id) AS max_id
-         FROM events GROUP BY user_id ORDER BY user_id""",
+         FROM events GROUP BY user_id ORDER BY user_id"""),
 
     // r73: the z-ordered layout must be answer-invariant — both
     // probes recomputed from the original parquet; the decoded-row
     // bound (the skipping itself) is pinned by ZorderGateSpec
-    "r73_zorder_probe" ->
+    Gate("r73_zorder_probe", RefQueries.zorder_probe,
       """SELECT probe, n, sv FROM (
            SELECT 'user' AS probe, CAST(count(*) AS BIGINT) AS n,
                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv
@@ -556,34 +398,34 @@ object SparkEntry {
                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv
            FROM events
            WHERE event_id <= (SELECT min(event_id) FROM events) + 999)
-         ORDER BY probe""",
+         ORDER BY probe"""),
 
-    "r07_status_anti_join" ->
+    Gate("r07_status_anti_join", RefQueries.status_anti_join,
       """SELECT h FROM (SELECT DISTINCT CAST(strftime(ts,'%Y%m%d%H') AS BIGINT) AS h FROM events)
          WHERE h NOT IN (SELECT DISTINCT CAST(strftime(ts,'%Y%m%d%H') AS BIGINT)
                          FROM events WHERE event_type='error')
-         ORDER BY h""",
+         ORDER BY h"""),
 
-    "r08_watermarks" ->
+    Gate("r08_watermarks", RefQueries.watermarks,
       """SELECT e.user_id AS user_id, c.c_name AS name, min(e.ts) AS min_ed,
                 arg_min(e.event_id, e.ts) AS first_id,
                 arg_max(e.event_id, e.ts) AS last_id
          FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-         GROUP BY e.user_id, c.c_name ORDER BY user_id""",
+         GROUP BY e.user_id, c.c_name ORDER BY user_id"""),
 
-    "r09_dedup_replacing" ->
+    Gate("r09_dedup_replacing", RefQueries.dedup_replacing,
       """SELECT user_id, event_type,
                 CAST(strftime(ts,'%Y%m') AS INTEGER) AS month_key,
                 max(event_id) AS kept_id,
                 arg_max(value, event_id) AS kept_value
-         FROM events GROUP BY 1,2,3 ORDER BY user_id, event_type, month_key""",
+         FROM events GROUP BY 1,2,3 ORDER BY user_id, event_type, month_key"""),
 
-    "r10_month_rollup" ->
+    Gate("r10_month_rollup", RefQueries.month_rollup,
       """SELECT CAST(strftime(ts,'%Y%m') AS INTEGER) AS month_key,
                 count(*) AS cnt, count(DISTINCT user_id) AS users
-         FROM events GROUP BY 1 ORDER BY month_key""",
+         FROM events GROUP BY 1 ORDER BY month_key"""),
 
-    "r11_tpch_q1" ->
+    Gate("r11_tpch_q1", RefQueries.tpch_q1,
       """SELECT l_returnflag, l_linestatus,
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
            CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -593,9 +435,9 @@ object SparkEntry {
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)/count(*) AS avg_qty,
            CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)/count(*) AS avg_price
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
+         GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"""),
 
-    "r12_tpch_q3" ->
+    Gate("r12_tpch_q3", RefQueries.tpch_q3,
       """SELECT o_orderkey,
            CAST(sum(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
            o_orderdate
@@ -606,25 +448,25 @@ object SparkEntry {
            AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
            AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
          GROUP BY o_orderkey, o_orderdate
-         ORDER BY revenue DESC, o_orderkey LIMIT 10""",
+         ORDER BY revenue DESC, o_orderkey LIMIT 10"""),
 
-    "r13_dim_join" ->
+    Gate("r13_dim_join", RefQueries.dim_join,
       """SELECT r_name, n_name, count(s_suppkey) AS suppliers,
                 coalesce(CAST(sum(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE), 0.0) AS total_bal
          FROM region JOIN nation ON n_regionkey = r_regionkey
          LEFT JOIN supplier ON s_nationkey = n_nationkey
-         GROUP BY r_name, n_name ORDER BY r_name, n_name""",
+         GROUP BY r_name, n_name ORDER BY r_name, n_name"""),
 
-    "r14_ch_sql" ->
+    Gate("r14_ch_sql", RefQueries.ch_sql_passthrough,
       """SELECT CAST(strftime(ts,'%Y%m') AS INTEGER) AS month_key,
                 count(*) FILTER (WHERE event_type='error') AS errors,
                 count(*) AS cnt
-         FROM events GROUP BY 1 ORDER BY month_key""",
+         FROM events GROUP BY 1 ORDER BY month_key"""),
 
-    "r15_ch_sql_arrayjoin" ->
+    Gate("r15_ch_sql_arrayjoin", RefQueries.ch_sql_arrayjoin,
       """SELECT CAST(json_extract_string(props,'$.k') AS BIGINT) AS k,
                 count(*) AS cnt
-         FROM events GROUP BY k ORDER BY k""",
+         FROM events GROUP BY k ORDER BY k"""),
 
     // r16: DuckDB DESCRIBEs the same parquet; the only canonicalization
     // needed is two type-name spellings (VARCHAR→STRING and the
@@ -632,20 +474,20 @@ object SparkEntry {
     // TIMESTAMP on the Spark side) — a fair normalization, not a
     // contrived bridge, so the former spec-only gate carries a full
     // rows+schema+hash oracle now
-    "r16_db_schema" ->
+    Gate("r16_db_schema", RefQueries.db_schema,
       """SELECT column_name,
                 CASE column_type
                   WHEN 'VARCHAR' THEN 'STRING'
                   WHEN 'TIMESTAMP_NS' THEN 'TIMESTAMP'
                   ELSE column_type END AS data_type
          FROM (DESCRIBE SELECT * FROM events)
-         ORDER BY column_name""",
+         ORDER BY column_name"""),
 
-    "r17_param" ->
+    Gate("r17_param", RefQueries.param_query,
       """SELECT event_id, user_id, value AS amount FROM events
-         WHERE event_type='purchase' AND value>100.0 ORDER BY event_id""",
+         WHERE event_type='purchase' AND value>100.0 ORDER BY event_id"""),
 
-    "r18_sessionize" ->
+    Gate("r18_sessionize", RefQueries.sessionize,
       """WITH x AS (SELECT user_id, event_id, ts,
              lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
            FROM events),
@@ -658,46 +500,46 @@ object SparkEntry {
            FROM y)
          SELECT user_id, session_idx, count(*) AS n_events,
                 min(ts) AS session_start, max(ts) AS session_end
-         FROM z GROUP BY 1,2 ORDER BY user_id, session_idx""",
+         FROM z GROUP BY 1,2 ORDER BY user_id, session_idx"""),
 
-    "r20_quantiles" ->
+    Gate("r20_quantiles", RefQueries.quantiles,
       """SELECT l_returnflag, count(*) AS n,
                 CAST(round(CAST(quantile_cont(l_extendedprice, 0.25) AS DECIMAL(28,10)),4) AS DOUBLE) AS p25,
                 CAST(round(CAST(quantile_cont(l_extendedprice, 0.5) AS DECIMAL(28,10)),4) AS DOUBLE) AS p50,
                 CAST(round(CAST(quantile_cont(l_extendedprice, 0.75) AS DECIMAL(28,10)),4) AS DOUBLE) AS p75,
                 CAST(round(CAST(quantile_cont(l_extendedprice, 0.95) AS DECIMAL(28,10)),4) AS DOUBLE) AS p95
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
+         FROM lineitem GROUP BY 1 ORDER BY 1"""),
 
-    "r25_ch_dialect" ->
+    Gate("r25_ch_dialect", RefQueries.ch_sql_dialect,
       """SELECT date_trunc('day', ts) AS day, CAST(isodow(ts) AS INTEGER) AS dow,
                 CAST(count(DISTINCT user_id) AS INTEGER) AS users,
                 CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS errors,
                 max(event_id) AS max_id
-         FROM events GROUP BY 1, 2 ORDER BY day""",
+         FROM events GROUP BY 1, 2 ORDER BY day"""),
 
     // r26: the HLL sketch is in exact coupon mode at this grain's
     // cardinality (~150 distinct per group << the lgK=12 promotion
     // threshold), so the estimate IS the exact distinct count and the
     // oracle can be plain count(DISTINCT); the spec additionally pins
     // the approximate regime's error bound at higher cardinality.
-    "r26_uniq_sketch" ->
+    Gate("r26_uniq_sketch", RefQueries.uniq_sketch,
       """SELECT event_type, count(DISTINCT user_id) AS uniq_users
-         FROM events GROUP BY 1 ORDER BY event_type""",
+         FROM events GROUP BY 1 ORDER BY event_type"""),
 
     // r27: DuckDB's date_diff counts partition boundaries like
     // ClickHouse's dateDiff; median == continuous-interpolation
     // percentile(0.5) == Spark's Percentile
-    "r27_ch_curried" ->
+    Gate("r27_ch_curried", RefQueries.ch_sql_curried,
       """SELECT event_type,
                 median(CAST(user_id AS DOUBLE)) AS med_user,
                 date_diff('day', CAST(min(ts) AS DATE), CAST(max(ts) AS DATE)) AS span_days,
                 count(*) AS c
-         FROM events GROUP BY 1 ORDER BY event_type""",
+         FROM events GROUP BY 1 ORDER BY event_type"""),
 
     // r30: merge-then-finalize must equal aggregate-once — the oracle
     // aggregates the whole table flat; uniq is in the sketch's exact
     // coupon regime at this cardinality
-    "r30_incr_rollup" ->
+    Gate("r30_incr_rollup", RefQueries.incremental_rollup,
       """SELECT event_type, count(*) AS n,
                 round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE), 4) AS sum_v,
                 round(CAST(min(value) AS DOUBLE), 4) AS min_v,
@@ -705,10 +547,10 @@ object SparkEntry {
                 round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
                       / count(*), 4) AS avg_v,
                 count(DISTINCT user_id) AS uniq
-         FROM events GROUP BY 1 ORDER BY event_type""",
+         FROM events GROUP BY 1 ORDER BY event_type"""),
 
     // r31: EXISTS over a correlated strictly-increasing chain
-    "r31_sequence_match" ->
+    Gate("r31_sequence_match", RefQueries.sequence_match,
       """SELECT u.user_id,
                 EXISTS (SELECT 1 FROM events a
                         JOIN events b ON b.user_id = a.user_id
@@ -718,9 +560,9 @@ object SparkEntry {
                         WHERE a.user_id = u.user_id
                           AND a.event_type = 'signup') AS matched
          FROM (SELECT DISTINCT user_id FROM events) u
-         ORDER BY u.user_id""",
+         ORDER BY u.user_id"""),
 
-    "r32_moving_avg" ->
+    Gate("r32_moving_avg", RefQueries.moving_avg,
       """WITH daily AS (SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
                                count(*) AS n
                         FROM events GROUP BY 1, 2)
@@ -730,16 +572,16 @@ object SparkEntry {
          FROM daily
          WINDOW w AS (PARTITION BY event_type ORDER BY day
                       ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-         ORDER BY event_type, day""",
+         ORDER BY event_type, day"""),
 
-    "r35_ch_final" -> finalOracleSql,
+    Gate("r35_ch_final", RefQueries.ch_final, finalOracleSql),
 
     // r71: the SAME expectation as r35 — FINAL over the bucketed
     // catalog table must be answer-invariant; the zero-hash-exchange
     // plan is pinned by PlanContractSpec + the fingerprint baseline
-    "r71_bucketed_final" -> finalOracleSql,
+    Gate("r71_bucketed_final", RefQueries.ch_final_bucketed, finalOracleSql),
 
-    "r37_salted_skew" ->
+    Gate("r37_salted_skew", RefQueries.salted_skew_agg,
       """SELECT k, n, sum_v, max_id FROM (
            SELECT CASE WHEN event_id % 10 <> 0 THEN 'hot'
                        ELSE 'u' || CAST(user_id AS VARCHAR) END AS k,
@@ -747,33 +589,33 @@ object SparkEntry {
                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_v,
                   max(event_id) AS max_id
            FROM events GROUP BY 1)
-         ORDER BY k""",
+         ORDER BY k"""),
 
-    "r38_ch_prewhere" ->
+    Gate("r38_ch_prewhere", RefQueries.ch_prewhere,
       """SELECT event_type, count(*) AS cnt, max(event_id) AS max_id
          FROM events
          WHERE value > 100 AND event_type <> 'error'
          GROUP BY event_type
-         ORDER BY event_type""",
+         ORDER BY event_type"""),
 
-    "r39_ch_totals" ->
+    Gate("r39_ch_totals", RefQueries.ch_totals,
       """SELECT coalesce(event_type, 'TOTAL') AS et,
                 count(*) AS cnt,
                 max(event_id) AS max_id
          FROM events
          GROUP BY GROUPING SETS ((event_type), ())
-         ORDER BY et""",
+         ORDER BY et"""),
 
-    "r40_ch_array_join" ->
+    Gate("r40_ch_array_join", RefQueries.ch_array_join,
       """SELECT tok, count(*) AS cnt, count(DISTINCT doc_id) AS docs
          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
                FROM documents)
          WHERE tok <> ''
          GROUP BY tok
          ORDER BY cnt DESC, tok
-         LIMIT 50""",
+         LIMIT 50"""),
 
-    "r41_ch_stats" ->
+    Gate("r41_ch_stats", RefQueries.ch_stats,
       """SELECT event_type,
                 CAST(round(CAST(stddev_pop(value)  AS DECIMAL(28,10)), 4) AS DOUBLE) AS sd_p,
                 CAST(round(CAST(stddev_samp(value) AS DECIMAL(28,10)), 4) AS DOUBLE) AS sd_s,
@@ -785,58 +627,58 @@ object SparkEntry {
                 arg_max(user_id, event_id) FILTER (WHERE value >= 50) AS last_user
          FROM events
          GROUP BY event_type
-         ORDER BY event_type""",
+         ORDER BY event_type"""),
 
-    "r42_ch_numbers" ->
+    Gate("r42_ch_numbers", RefQueries.ch_numbers_spine,
       """SELECT r.range AS hod, coalesce(e.cnt, 0) AS cnt
          FROM range(24) AS r
          LEFT JOIN (SELECT hour(ts) AS h, count(*) AS cnt
                     FROM events GROUP BY 1) AS e
            ON r.range = e.h
-         ORDER BY hod""",
+         ORDER BY hod"""),
 
-    "r45_ch_summap" ->
+    Gate("r45_ch_summap", RefQueries.ch_summap,
       """SELECT CAST(strftime(ts, '%Y%m') AS INT) AS month,
                 event_type AS k,
                 CAST(round(CAST(sum(value) AS DECIMAL(18,2)), 2) AS DOUBLE) AS v
          FROM events
          GROUP BY 1, 2
-         ORDER BY month, k""",
+         ORDER BY month, k"""),
 
-    "r44_ch_fill" ->
+    Gate("r44_ch_fill", RefQueries.ch_with_fill,
       """SELECT d AS day, e.cnt AS cnt
          FROM (SELECT unnest(range(TIMESTAMP '2023-12-29',
                                    TIMESTAMP '2024-02-02',
                                    INTERVAL 1 DAY)) AS d) f
          FULL JOIN (SELECT date_trunc('day', ts) AS d, count(*) AS cnt
                     FROM events GROUP BY 1) e USING (d)
-         ORDER BY day""",
+         ORDER BY day"""),
 
-    "r43_ch_dict" ->
+    Gate("r43_ch_dict", RefQueries.ch_dict,
       """SELECT coalesce(n.n_name, '?') AS nation,
                 count(*) AS cnt,
                 CAST(round(CAST(sum(c_acctbal) AS DECIMAL(18,2)), 2) AS DOUBLE) AS bal
          FROM customer c
          LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
          GROUP BY 1
-         ORDER BY nation""",
+         ORDER BY nation"""),
 
-    "r36_ch_limit_by" ->
+    Gate("r36_ch_limit_by", RefQueries.ch_limit_by,
       """SELECT user_id, event_id, value
          FROM (SELECT *, row_number() OVER (PARTITION BY user_id
                                             ORDER BY value DESC, event_id) AS rn
                FROM events) WHERE rn <= 2
-         ORDER BY value DESC, event_id""",
+         ORDER BY value DESC, event_id"""),
 
-    "r34_cube" ->
+    Gate("r34_cube", RefQueries.cube_agg,
       """SELECT coalesce(event_type, 'ALL') AS event_type,
                 coalesce(strftime(ts, '%Y%m'), 'ALL') AS month,
                 count(*) AS n, count(DISTINCT user_id) AS users
          FROM events
          GROUP BY CUBE(event_type, strftime(ts, '%Y%m'))
-         ORDER BY event_type, month""",
+         ORDER BY event_type, month"""),
 
-    "r33_set_ops" ->
+    Gate("r33_set_ops", RefQueries.set_ops,
       """WITH p AS (SELECT DISTINCT user_id FROM events
                     WHERE event_type = 'purchase'),
             e AS (SELECT DISTINCT user_id FROM events
@@ -846,21 +688,21 @@ object SparkEntry {
          UNION ALL
          SELECT 'purchase_only' AS tag, user_id
          FROM (SELECT user_id FROM p EXCEPT SELECT user_id FROM e)
-         ORDER BY tag, user_id""",
+         ORDER BY tag, user_id"""),
 
     // r28: oracle is the PLAIN exact semi join — the bloom filter on
     // the Spark side only prunes and never changes the result
-    "r28_bloom_semijoin" ->
+    Gate("r28_bloom_semijoin", RefQueries.bloom_semijoin,
       """SELECT l_returnflag, count(*) AS n,
                 CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
          FROM lineitem
          WHERE l_orderkey IN
            (SELECT o_orderkey FROM orders WHERE o_totalprice > 150000.0)
-         GROUP BY 1 ORDER BY l_returnflag""",
+         GROUP BY 1 ORDER BY l_returnflag"""),
 
     // r29: greedy earliest-next chains via correlated min-subqueries —
     // exact for this operator (see Funnel scaladoc)
-    "r29_funnel" ->
+    Gate("r29_funnel", RefQueries.funnel,
       """WITH s1 AS (SELECT user_id, ts AS t1 FROM events
                      WHERE event_type = 'view'),
            s2 AS (SELECT s1.user_id, t1,
@@ -888,11 +730,11 @@ object SparkEntry {
                 CAST(coalesce(max(lv.lvl), 0) AS INTEGER) AS level
          FROM (SELECT DISTINCT user_id FROM events) u
          LEFT JOIN lv ON u.user_id = lv.user_id
-         GROUP BY u.user_id ORDER BY u.user_id""",
+         GROUP BY u.user_id ORDER BY u.user_id"""),
 
     // r49: identical oracle to r29 — the SQL-aggregate spelling of
     // the same funnel must agree with the relational operator
-    "r49_ch_funnel" ->
+    Gate("r49_ch_funnel", RefQueries.ch_funnel_sql,
       """WITH s1 AS (SELECT user_id, ts AS t1 FROM events
                      WHERE event_type = 'view'),
            s2 AS (SELECT s1.user_id, t1,
@@ -920,47 +762,47 @@ object SparkEntry {
                 CAST(coalesce(max(lv.lvl), 0) AS INTEGER) AS level
          FROM (SELECT DISTINCT user_id FROM events) u
          LEFT JOIN lv ON u.user_id = lv.user_id
-         GROUP BY u.user_id ORDER BY u.user_id""",
+         GROUP BY u.user_id ORDER BY u.user_id"""),
 
-    "r24_range_join" ->
+    Gate("r24_range_join", RefQueries.range_join,
       """SELECT p.p_partkey AS p_partkey, count(*) AS n_in_band,
                 CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
          FROM lineitem l JOIN part p
            ON p.p_retailprice - 50 <= l.l_extendedprice
           AND l.l_extendedprice < p.p_retailprice + 50
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
-    "r23_asof" ->
+    Gate("r23_asof", RefQueries.asof_join,
       """SELECT e.user_id AS user_id, e.event_id AS event_id, e.ts AS ts,
                 p.value AS asof_value, p.ts AS asof_ts
          FROM (SELECT event_id, user_id, ts FROM events WHERE event_type='click') e
          ASOF JOIN (SELECT user_id, ts, value FROM events WHERE event_type='purchase') p
            ON e.user_id = p.user_id AND e.ts >= p.ts
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
 
     // r46: identical semantics to r23 but the Spark side arrives as
     // verbatim ClickHouse ASOF JOIN text through ChSqlRewrite; the
     // oracle is DuckDB's native ASOF JOIN — two independent engines'
     // closest-match implementations must agree row-for-row.
-    "r46_ch_asof" ->
+    Gate("r46_ch_asof", RefQueries.ch_asof,
       """SELECT c.event_id AS event_id, c.user_id AS user_id, c.ts AS ts,
                 p.value AS asof_value, p.ts AS asof_ts
          FROM (SELECT event_id, user_id, ts FROM events WHERE event_type='click') c
          ASOF JOIN (SELECT user_id, ts, value FROM events WHERE event_type='purchase') p
            ON c.user_id = p.user_id AND c.ts >= p.ts
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
 
     // r50: the scalar-WITH/paren-less-USING/LIMIT-offset tail, stated
     // in portable SQL (aliases expanded, LIMIT/OFFSET spelled out)
-    "r50_ch_dialect_tail" ->
+    Gate("r50_ch_dialect_tail", RefQueries.ch_dialect_tail,
       """SELECT user_id, count(*) AS n_big,
                 CAST(count(*) FILTER (WHERE value > 100) AS BIGINT) AS n_huge
          FROM events WHERE value > 50
          GROUP BY user_id ORDER BY user_id
-         LIMIT 20 OFFSET 5""",
+         LIMIT 20 OFFSET 5"""),
 
     // r51: the JSONExtract family + bracket literals, portable form
-    "r51_ch_json" ->
+    Gate("r51_ch_json", RefQueries.ch_json,
       """SELECT event_id,
                 CAST(json_extract(props, '$.k') AS BIGINT) AS k,
                 json_extract(props, '$.k') IS NOT NULL AS has_k,
@@ -968,33 +810,33 @@ object SparkEntry {
          FROM events
          WHERE json_extract(props, '$.k') IS NOT NULL
          ORDER BY event_id
-         LIMIT 500""",
+         LIMIT 500"""),
 
     // r52/r53: the streaming gates' oracles are plain batch SQL — the
     // streaming run drains a static source with AvailableNow, so its
     // result must equal the one-shot aggregation/projection
-    "r52_stream_window" ->
+    Gate("r52_stream_window", StreamingQueries.stream_window,
       """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
                 count(*) AS cnt,
                 CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sv
-         FROM events GROUP BY 1, 2 ORDER BY day, event_type""",
+         FROM events GROUP BY 1, 2 ORDER BY day, event_type"""),
 
-    "r53_stream_dedup" ->
+    Gate("r53_stream_dedup", StreamingQueries.stream_dedup,
       """SELECT event_id, user_id, event_type
-         FROM events ORDER BY event_id""",
+         FROM events ORDER BY event_id"""),
 
     // r62: restart-recovery dedup — the sink holds each event exactly
     // once IFF the second leg resumed the first leg's checkpoint
     // state (a cold restart would double every row)
-    "r62_stream_recovery" ->
+    Gate("r62_stream_recovery", StreamingQueries.stream_recovery,
       """SELECT event_id, user_id, event_type
-         FROM events ORDER BY event_id""",
+         FROM events ORDER BY event_id"""),
 
     // r63: watermarked dedup — survivors are the b1 first arrivals,
     // the two watermark pushers, and EVERY b4 re-arrival (outside the
     // 10-minute horizon, state evicted); the b2 within-horizon
     // duplicates are absent
-    "r63_stream_watermark_dedup" ->
+    Gate("r63_stream_watermark_dedup", StreamingQueries.stream_watermark_dedup,
       """WITH ids AS (SELECT DISTINCT event_id FROM events
                       WHERE event_id < 100),
          rows_all AS (
@@ -1010,42 +852,42 @@ object SparkEntry {
            UNION ALL SELECT 'p1', TIMESTAMP '2024-01-02 00:00:00'
            UNION ALL SELECT 'p2', TIMESTAMP '2024-01-03 00:00:00')
          SELECT doc_key, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-         FROM rows_all ORDER BY doc_key, ts_s""",
+         FROM rows_all ORDER BY doc_key, ts_s"""),
 
     // r56: the drained stream-static enrichment equals the batch
     // dim join + daily rollup
-    "r56_stream_enrich" ->
+    Gate("r56_stream_enrich", StreamingQueries.stream_enrich,
       """SELECT strftime(ts, '%Y-%m-%d') AS day,
                 CAST(c_nationkey AS INTEGER) AS nation_key,
                 count(*) AS cnt,
                 CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sv
          FROM events e JOIN customer c ON e.user_id = c.c_custkey
-         GROUP BY 1, 2 ORDER BY day, nation_key""",
+         GROUP BY 1, 2 ORDER BY day, nation_key"""),
 
     // r59: the drained stream-static ANTI join equals batch
     // decontamination — kept docs are those whose content hash is
     // absent from the doc_id%97 eval set
-    "r59_stream_decontam" ->
+    Gate("r59_stream_decontam", StreamingQueries.stream_decontam,
       """SELECT source, count(*) AS n_kept,
                 CAST(sum(doc_id) AS BIGINT) AS sum_ids
          FROM documents
          WHERE md5(text) NOT IN
            (SELECT md5(text) FROM documents WHERE doc_id % 97 = 0)
-         GROUP BY source ORDER BY source""",
+         GROUP BY source ORDER BY source"""),
 
     // r61: the rollup is computed from the ORIGINAL parquet — a hash
     // match proves the month-partitioned ORC write→read round trip
     // is lossless
-    "r61_orc_roundtrip" ->
+    Gate("r61_orc_roundtrip", RefQueries.orc_roundtrip,
       """SELECT CAST(strftime(ts, '%Y%m') AS INTEGER) AS month_key,
                 count(*) AS cnt,
                 CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sv,
                 min(event_id) AS min_id, max(event_id) AS max_id
-         FROM events GROUP BY 1 ORDER BY month_key""",
+         FROM events GROUP BY 1 ORDER BY month_key"""),
 
     // r60: the drained streaming near-dup intake equals the d15
     // exhaustive cross-parity ground truth rolled up per batch doc
-    "r60_stream_neardup" ->
+    Gate("r60_stream_neardup", StreamingQueries.stream_neardup,
       """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
          s AS (SELECT doc_id, unnest(list_distinct(
                  [substr(t, i, 5) FOR i IN range(1, greatest(length(t)-4, 1) + 1)]
@@ -1062,11 +904,11 @@ object SparkEntry {
                WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8)
          SELECT batch_id AS doc_id, CAST(count(*) AS BIGINT) AS n_dups,
                 CAST(sum(corpus_id) AS BIGINT) AS sum_ids
-         FROM v GROUP BY 1 ORDER BY doc_id""",
+         FROM v GROUP BY 1 ORDER BY doc_id"""),
 
     // r57: drained streaming top-k sketch == exact per-day
     // (count DESC, item ASC) top-5 — sketch exact while unsaturated
-    "r57_stream_topk" ->
+    Gate("r57_stream_topk", StreamingQueries.stream_topk,
       """WITH c AS (SELECT strftime(ts, '%Y-%m-%d') AS day,
                            json_extract_string(props, '$.k') AS item,
                            count(*) AS est
@@ -1076,12 +918,12 @@ object SparkEntry {
                      ORDER BY est DESC, item ASC) AS rank
                  FROM c)
          SELECT day, CAST(rank AS INTEGER) AS rank, item, est
-         FROM r WHERE rank <= 5 ORDER BY day, rank""",
+         FROM r WHERE rank <= 5 ORDER BY day, rank"""),
 
     // r58: drained streaming cell ingestion == batch assignment over
     // the same persisted s03 centroids (argmin squared-L2, ties to the
     // lower cluster id) rolled up to per-cell integer checksums
-    "r58_stream_ann_ingest" ->
+    Gate("r58_stream_ann_ingest", StreamingQueries.stream_ann_ingest,
       """WITH cc AS (SELECT cluster_id, centroid
            FROM '/tmp/graft_s03_centroids/sf0.01/*.parquet'),
          e AS (SELECT vec_id,
@@ -1098,11 +940,11 @@ object SparkEntry {
                 count(*) AS n_vecs,
                 CAST(sum(vec_id) AS BIGINT) AS sum_ids,
                 min(vec_id) AS min_id, max(vec_id) AS max_id
-         FROM assigned GROUP BY cell ORDER BY cell""",
+         FROM assigned GROUP BY cell ORDER BY cell"""),
 
     // r54: the stream-stream interval join drains a finite source, so
     // the attribution pairs equal the batch self-join's
-    "r54_stream_join" ->
+    Gate("r54_stream_join", StreamingQueries.stream_join,
       """SELECT c.user_id, c.event_id AS click_id,
                 p.event_id AS purchase_id,
                 c.ts AS click_ts, p.ts AS purchase_ts
@@ -1110,14 +952,14 @@ object SparkEntry {
            ON c.user_id = p.user_id
           AND c.event_type = 'click' AND p.event_type = 'purchase'
           AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 6 HOUR
-         ORDER BY c.user_id, click_id, purchase_id""",
+         ORDER BY c.user_id, click_id, purchase_id"""),
 
     // r55: batch sessions + the streaming EMISSION contract — a
     // non-final session was closed in-batch by a later event; a final
     // session emits iff its ms-floored timeout (last + 8h) lies
     // strictly before the final watermark (ms(max_ts) - 10 min).
     // Emitted timestamps are ms-truncated Timestamp state.
-    "r55_stream_sessionize" ->
+    Gate("r55_stream_sessionize", StreamingQueries.stream_sessionize,
       """WITH x AS (SELECT user_id, event_id, ts,
              lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
            FROM events),
@@ -1143,26 +985,26 @@ object SparkEntry {
                FROM sess s), m
          WHERE session_idx < max_idx
             OR end_ms + 28800000 < wm_ms - 600000
-         ORDER BY user_id, session_start""",
+         ORDER BY user_id, session_start"""),
 
     // r47: the mutated table's end state, stated declaratively — the
     // DELETE drops the error partition, the UPDATE doubles qualifying
     // purchase rows; everything else must round-trip untouched.
-    "r47_ch_mutation" ->
+    Gate("r47_ch_mutation", RefQueries.ch_mutation,
       """SELECT event_id, user_id, event_type,
                 CASE WHEN event_type = 'purchase' AND value > 50
                      THEN value * 2 ELSE value END AS value
          FROM events WHERE event_type <> 'error'
-         ORDER BY event_id""",
+         ORDER BY event_id"""),
 
     // r48: the materialized view's merged read must equal one direct
     // aggregation, regardless of how the inserts were split into blocks
-    "r48_ch_matview" ->
+    Gate("r48_ch_matview", RefQueries.ch_matview,
       """SELECT user_id, count(*) AS cnt,
                 CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sv
-         FROM events GROUP BY user_id ORDER BY user_id""",
+         FROM events GROUP BY user_id ORDER BY user_id"""),
 
-    "r21_rollup" ->
+    Gate("r21_rollup", RefQueries.rollup_subtotals,
       """SELECT event_type, month_key,
                 CAST(grouping(event_type)*2 + grouping(month_key) AS INTEGER) AS lvl,
                 count(*) AS cnt,
@@ -1171,9 +1013,9 @@ object SparkEntry {
                  CAST(strftime(ts,'%Y%m') AS INTEGER) AS month_key, value
                FROM events)
          GROUP BY ROLLUP(event_type, month_key)
-         ORDER BY lvl, event_type ASC NULLS FIRST, month_key ASC NULLS FIRST""",
+         ORDER BY lvl, event_type ASC NULLS FIRST, month_key ASC NULLS FIRST"""),
 
-    "r22_window_rank" ->
+    Gate("r22_window_rank", RefQueries.window_rank,
       """WITH c AS (SELECT event_type, user_id, count(*) AS cnt
            FROM events GROUP BY 1,2),
          r AS (SELECT event_type, user_id, cnt,
@@ -1181,25 +1023,25 @@ object SparkEntry {
              ntile(4) OVER (PARTITION BY event_type ORDER BY cnt DESC, user_id) AS qtile
            FROM c)
          SELECT event_type, user_id, cnt, rnk, qtile FROM r
-         WHERE rnk <= 5 ORDER BY event_type, rnk""",
+         WHERE rnk <= 5 ORDER BY event_type, rnk"""),
 
-    "r19_retention" ->
+    Gate("r19_retention", RefQueries.retention,
       """WITH d AS (SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
            FROM events)
          SELECT strftime(a.day, '%Y-%m-%d') AS day, count(*) AS active,
                 count(b.user_id) AS retained
          FROM d a LEFT JOIN d b
            ON a.user_id = b.user_id AND b.day = a.day + INTERVAL 1 DAY
-         GROUP BY 1 ORDER BY day""",
+         GROUP BY 1 ORDER BY day"""),
 
-    "g03_degree_topk" ->
+    Gate("g03_degree_topk", RefQueries.graph_degree_topk,
       """WITH e AS (SELECT user_id AS src,
              CAST(json_extract_string(props,'$.k') AS INTEGER)%10 AS dst,
              max(ts) AS updated_at, count(*) AS weight
            FROM events GROUP BY 1,2)
          SELECT src, CAST(sum(weight) AS BIGINT) AS out_weight,
                 count(*) AS out_degree, max(updated_at) AS last_seen
-         FROM e GROUP BY src ORDER BY out_weight DESC, src LIMIT 20""",
+         FROM e GROUP BY src ORDER BY out_weight DESC, src LIMIT 20"""),
 
     // g04: ε-banded pagerank gate (t10's pattern — integer/boolean
     // output only). The oracle re-runs the same 5-round power
@@ -1209,7 +1051,7 @@ object SparkEntry {
     // CTE only once, so there is no second "nodes" leg to re-attach
     // them). rn compares the ORDERING on 6-dp-rounded ranks;
     // within_bound (fixed-point residual, Spark side) pins the VALUES.
-    "g04_pagerank" ->
+    Gate("g04_pagerank", RefQueries.graph_pagerank,
       """WITH RECURSIVE
          edges AS (SELECT DISTINCT user_id AS src,
              CAST(CAST(json_extract_string(props,'$.k') AS INTEGER) % 10
@@ -1233,9 +1075,9 @@ object SparkEntry {
                   (ORDER BY round(rank, 6) DESC, id ASC) AS INTEGER) AS rn,
                 id, true AS within_bound
          FROM pr WHERE iter = 5
-         ORDER BY rn LIMIT 20""",
+         ORDER BY rn LIMIT 20"""),
 
-    "d06_containment" ->
+    Gate("d06_containment", PipelineQueries.containment_pairs,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents)
@@ -1244,9 +1086,9 @@ object SparkEntry {
          WHERE least(len(a.w), len(b.w)) > 0
            AND CAST(len(list_intersect(a.w,b.w)) AS DOUBLE)
                / least(len(a.w), len(b.w)) >= 0.9
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
-    "d07_decontaminate" ->
+    Gate("d07_decontaminate", PipelineQueries.decontaminate,
       """WITH d AS (SELECT doc_id, source,
              md5(trim(regexp_replace(lower(text),'\s+',' ','g'))) AS fp,
              regexp_split_to_array(trim(lower(text)),'\s+') AS toks
@@ -1273,39 +1115,39 @@ object SparkEntry {
          WHERE CAST(round(CAST(CAST(len(list_intersect(t.w, e.w)) AS DOUBLE)
                   / least(len(t.w), len(e.w)) AS DECIMAL(20,10)),4) AS DOUBLE) >= 0.8
             OR t.fp = e.fp
-         ORDER BY train_id, eval_id""",
+         ORDER BY train_id, eval_id"""),
 
     // d08: the synthesized crawl URLs vary only in junk (case, default
     // port, tracking params, param order, fragment, trailing slash)
     // within each doc_id%100 group — the oracle derives the canonical
     // string in CLOSED FORM, independently of the regex pipeline, so
     // any canonicalization bug breaks the group hash
-    "d08_url_dedup" ->
+    Gate("d08_url_dedup", PipelineQueries.url_dedup,
       """WITH d AS (SELECT doc_id,
              'https://www.site' || CAST(doc_id%10 AS VARCHAR)
                || '.com/Articles/' || CAST(doc_id%100 AS VARCHAR)
                || '?ref=' || CAST(doc_id%4 AS VARCHAR) AS canonical_url
            FROM documents)
          SELECT canonical_url, min(doc_id) AS keep_id, count(*) AS dups
-         FROM d GROUP BY canonical_url ORDER BY keep_id""",
+         FROM d GROUP BY canonical_url ORDER BY keep_id"""),
 
-    "g01_graph_nodes" ->
+    Gate("g01_graph_nodes", RefQueries.graph_nodes,
       """SELECT user_id AS node_id, arg_max(event_type, ts) AS last_type,
                 max(ts) AS updated_at, count(*) AS degree
-         FROM events GROUP BY 1 ORDER BY node_id""",
+         FROM events GROUP BY 1 ORDER BY node_id"""),
 
-    "g02_graph_edges" ->
+    Gate("g02_graph_edges", RefQueries.graph_edges,
       """SELECT user_id AS src,
                 CAST(json_extract_string(props,'$.k') AS INTEGER)%10 AS dst,
                 arg_max(event_type, ts) AS last_type, max(ts) AS updated_at,
                 count(*) AS weight
-         FROM events GROUP BY 1,2 ORDER BY src, dst""",
+         FROM events GROUP BY 1,2 ORDER BY src, dst"""),
 
-    "d01_exact_dedup" ->
+    Gate("d01_exact_dedup", PipelineQueries.exact_dedup,
       """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS dups
-         FROM documents GROUP BY h ORDER BY keep_id""",
+         FROM documents GROUP BY h ORDER BY keep_id"""),
 
-    "d04_jaccard_pairs" ->
+    Gate("d04_jaccard_pairs", PipelineQueries.jaccard_pairs,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents)
@@ -1313,7 +1155,7 @@ object SparkEntry {
          FROM d a JOIN d b ON b.doc_id > a.doc_id AND b.doc_id <= a.doc_id + 20
          WHERE CAST(len(list_intersect(a.w,b.w)) AS DOUBLE)
                / (len(a.w) + len(b.w) - len(list_intersect(a.w,b.w))) >= 0.6
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // d02/d03 recall gates: the oracle is the EXHAUSTIVE exact
     // shingle-Jaccard pair set at J >= 0.8 — distinct 5-char windows
@@ -1326,7 +1168,7 @@ object SparkEntry {
     // LSH/SimHash candidate machinery, so a row mismatch means lost
     // recall, not formatting. Both emit (inter, un) as integers —
     // exact Jaccard pinned without any float in the compared output.
-    "d02_minhash_lsh" ->
+    Gate("d02_minhash_lsh", PipelineQueries.minhash_lsh_dedup,
       """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
          s AS (SELECT doc_id, unnest(list_distinct(
                  [substr(t, i, 5) FOR i IN range(1, greatest(length(t)-4, 1) + 1)]
@@ -1340,7 +1182,7 @@ object SparkEntry {
          FROM p JOIN sz sa ON sa.doc_id = id_a
                 JOIN sz sb ON sb.doc_id = id_b
          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // d16: the boilerplate-resistant variant — the oracle recomputes
     // the shingle document-frequency table, the top-64 stop set
@@ -1349,7 +1191,7 @@ object SparkEntry {
     // shingle sets from scratch. A row mismatch means the Spark side's
     // DF pass, stop-set pick, hash-level filter, or banded recall
     // diverged.
-    "d16_stop_shingle" ->
+    Gate("d16_stop_shingle", PipelineQueries.stop_shingle_neardup,
       """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
          s AS (SELECT doc_id, unnest(list_distinct(
                  [substr(t, i, 5) FOR i IN range(1, greatest(length(t)-4, 1) + 1)]
@@ -1366,38 +1208,38 @@ object SparkEntry {
          FROM p JOIN sz sa ON sa.doc_id = id_a
                 JOIN sz sb ON sb.doc_id = id_b
          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // d17: exhaustive corpus-wide Levenshtein ground truth — the
     // |Δlen| ≤ k prefilter is a true invariant of edit distance ≤ k
     // (lossless), so the blocked Spark pair set must equal this
     // full ≤ 16 set exactly
-    "d17_edit_distance" ->
+    Gate("d17_edit_distance", PipelineQueries.edit_distance_neardup,
       """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                 CAST(levenshtein(a.text, b.text) AS INTEGER) AS dist
          FROM documents a JOIN documents b
            ON b.doc_id > a.doc_id
           AND abs(length(b.text) - length(a.text)) <= 16
          WHERE levenshtein(a.text, b.text) <= 16
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // d18: SAME exhaustive ground truth as d17 — the composed
     // (MinHash-band × length-filter) blocking must reach the identical
     // corpus-wide Levenshtein ≤ 16 pair set, proving the lossy content
     // key loses nothing on this corpus (recall-gate, d02 discipline)
-    "d18_edit_blocked" ->
+    Gate("d18_edit_blocked", PipelineQueries.edit_distance_blocked,
       """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                 CAST(levenshtein(a.text, b.text) AS INTEGER) AS dist
          FROM documents a JOIN documents b
            ON b.doc_id > a.doc_id
           AND abs(length(b.text) - length(a.text)) <= 16
          WHERE levenshtein(a.text, b.text) <= 16
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // d19: the t20 gaps-and-islands recipe at CHARACTER level — zip
     // positions with window md5s, keep hashes spanning >= 2 docs,
     // merge consecutive starts per doc into maximal spans
-    "d19_exact_substrings" ->
+    Gate("d19_exact_substrings", PipelineQueries.exact_substrings,
       """WITH w AS (SELECT doc_id,
              unnest(range(CAST(length(text)-39 AS BIGINT))) AS i,
              unnest(list_transform(range(CAST(length(text)-39 AS BIGINT)),
@@ -1414,13 +1256,13 @@ object SparkEntry {
          SELECT doc_id, CAST(min(i) AS BIGINT) AS span_start,
                 CAST(count(*) + 39 AS BIGINT) AS span_len
          FROM isl GROUP BY doc_id, island
-         ORDER BY doc_id, span_start""",
+         ORDER BY doc_id, span_start"""),
 
     // d20: replays the cut relationally — min-doc window ownership,
     // islands, interval union via running max, then a gap-row splice
     // (string_agg of the kept segments ordered by position) instead
     // of Spark's ordered fold; all integer arithmetic, engine-exact
-    "d20_exact_substr_cut" ->
+    Gate("d20_exact_substr_cut", PipelineQueries.exact_substr_cut,
       """WITH w AS (SELECT doc_id,
              unnest(range(CAST(length(text)-39 AS BIGINT))) AS i,
              unnest(list_transform(range(CAST(length(text)-39 AS BIGINT)),
@@ -1463,12 +1305,12 @@ object SparkEntry {
                 coalesce(cc.cut_chars, 0) AS cut_chars
          FROM documents d LEFT JOIN agg USING (doc_id)
            LEFT JOIN cc USING (doc_id)
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id"""),
 
     // d13: same exhaustive exact ground truth as d02/d03 — the THIRD
     // independent candidate generator (densified OPH) must lose no
     // J >= 0.8 pair either
-    "d13_oph_lsh" ->
+    Gate("d13_oph_lsh", PipelineQueries.oph_lsh_dedup,
       """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
          s AS (SELECT doc_id, unnest(list_distinct(
                  [substr(t, i, 5) FOR i IN range(1, greatest(length(t)-4, 1) + 1)]
@@ -1482,9 +1324,9 @@ object SparkEntry {
          FROM p JOIN sz sa ON sa.doc_id = id_a
                 JOIN sz sb ON sb.doc_id = id_b
          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
-    "d03_simhash" ->
+    Gate("d03_simhash", PipelineQueries.simhash_dedup,
       """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
          s AS (SELECT doc_id, unnest(list_distinct(
                  [substr(t, i, 5) FOR i IN range(1, greatest(length(t)-4, 1) + 1)]
@@ -1498,11 +1340,11 @@ object SparkEntry {
          FROM p JOIN sz sa ON sa.doc_id = id_a
                 JOIN sz sb ON sb.doc_id = id_b
          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // g05: same edge definition as d04, closed into triangles; the
     // Spark side's degree orientation is count-invariant
-    "g05_triangles" ->
+    Gate("g05_triangles", PipelineQueries.neardup_triangles,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -1518,9 +1360,9 @@ object SparkEntry {
                        (SELECT a AS x FROM t UNION ALL SELECT b FROM t
                         UNION ALL SELECT c FROM t)) AS BIGINT)
                   AS nodes_in_triangles
-         FROM t""",
+         FROM t"""),
 
-    "d05_embedding_neardup" ->
+    Gate("d05_embedding_neardup", PipelineQueries.embedding_neardup,
       """WITH e AS (SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings)
@@ -1528,9 +1370,9 @@ object SparkEntry {
          FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
          WHERE list_inner_product(a.v,b.v)
                / (sqrt(list_inner_product(a.v,a.v))*sqrt(list_inner_product(b.v,b.v))) >= 0.35
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
-    "p01_clean_corpus" ->
+    Gate("p01_clean_corpus", PipelineQueries.clean_corpus,
       s"""WITH sw(sw_lang, sw_word) AS (VALUES ${graft.functions.TextFunctions.stopwords
              .map { case (l, w) => s"('$l','$w')" }.mkString(",")}),
          tok AS (SELECT doc_id,
@@ -1566,11 +1408,11 @@ object SparkEntry {
          JOIN q ON d.doc_id = q.doc_id
          WHERE l.pred_lang = 'en' AND q.quality_score >= 0.42
          GROUP BY md5(d.text)
-         ORDER BY keep_id""",
+         ORDER BY keep_id"""),
 
     // p10: the composed pipeline — p01's clean CTEs, p09's chunk
     // arithmetic, p03's packing window, chained
-    "p10_pipeline" ->
+    Gate("p10_pipeline", PipelineQueries.pipeline_end_to_end,
       s"""WITH sw(sw_lang, sw_word) AS (VALUES ${graft.functions.TextFunctions.stopwords
              .map { case (l, w) => s"('$l','$w')" }.mkString(",")}),
          tok AS (SELECT doc_id,
@@ -1621,9 +1463,9 @@ object SparkEntry {
                 CAST(floor((sum(n_toks) OVER (ORDER BY doc_id, chunk_idx
                   ROWS UNBOUNDED PRECEDING) - n_toks) / 2048.0) AS BIGINT)
                   AS shard_id
-         FROM ch ORDER BY doc_id, chunk_idx""",
+         FROM ch ORDER BY doc_id, chunk_idx"""),
 
-    "p02_neardup_groups" ->
+    Gate("p02_neardup_groups", PipelineQueries.neardup_groups,
       """WITH RECURSIVE
          d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
@@ -1639,13 +1481,13 @@ object SparkEntry {
            UNION
            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.node = e.src)
          SELECT src AS doc_id, min(node) AS comp
-         FROM reach GROUP BY src ORDER BY doc_id""",
+         FROM reach GROUP BY src ORDER BY doc_id"""),
 
     // p12: unbiased duplicate downweighting — probes the persisted
     // p02 component map, then an integer-exact md5 coin
     // (u32·|comp| < 2^32 keeps with probability 1/|comp|); the hex
     // parse is a strpos fold
-    "p12_soft_dedup" ->
+    Gate("p12_soft_dedup", PipelineQueries.soft_dedup,
       """WITH
          cc AS (SELECT doc_id, comp
                 FROM '/tmp/graft_p02_components/sf0.01/*.parquet'),
@@ -1661,11 +1503,11 @@ object SparkEntry {
            FROM a JOIN sz ON a.comp = sz.comp)
          SELECT doc_id, comp, csize,
                 u32 * csize < 4294967296 AS kept
-         FROM u ORDER BY doc_id""",
+         FROM u ORDER BY doc_id"""),
 
     // g07: 3 unrolled rounds of the k=2 peel over the same verified-
     // Jaccard edge list as p02/g05/g06; survivors with final degree
-    "g07_kcore" ->
+    Gate("g07_kcore", PipelineQueries.kcore,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -1688,14 +1530,14 @@ object SparkEntry {
          e3 AS (SELECT e.src, e.dst FROM e2 e
                 JOIN k2 a ON e.src = a.node JOIN k2 b ON e.dst = b.node)
          SELECT src AS node_id, count(*) AS degree
-         FROM e3 GROUP BY src ORDER BY node_id""",
+         FROM e3 GROUP BY src ORDER BY node_id"""),
 
     // d11: representative election over the p02 component structure —
     // probes the PERSISTED component map (the artifact p02's build
     // path writes and its own oracle re-derives relationally) + the
     // t02 quality arithmetic, election by (quantized score DESC,
     // doc_id ASC); singletons keep themselves
-    "d11_keep_best" ->
+    Gate("d11_keep_best", PipelineQueries.neardup_keep_best,
       """WITH
          cc AS (SELECT doc_id, comp
                 FROM '/tmp/graft_p02_components/sf0.01/*.parquet'),
@@ -1730,13 +1572,13 @@ object SparkEntry {
                 a.doc_id = e.kept_doc AS kept
          FROM a JOIN (SELECT comp, kept_doc FROM e WHERE rn = 1) e
            ON a.comp = e.comp
-         ORDER BY a.doc_id""",
+         ORDER BY a.doc_id"""),
 
     // d09: SemDeDup replay — d09's own persisted 32-cell centroids
     // (s03-style index-build artifact), the same assignment arithmetic,
     // then the intra-cell lower-id cosine threshold; outputs are all
     // integers (ids + cell), so no float formatting risk
-    "d09_semantic_dedup" ->
+    Gate("d09_semantic_dedup", PipelineQueries.semantic_dedup,
       """WITH c AS (SELECT cluster_id, centroid
            FROM '/tmp/graft_d09_centroids/sf0.01/*.parquet'),
          e AS (SELECT vec_id,
@@ -1755,11 +1597,11 @@ object SparkEntry {
            ON a.cell = b.cell AND a.vec_id < b.vec_id
          WHERE list_inner_product(a.v,b.v)
                / (sqrt(list_inner_product(a.v,a.v))*sqrt(list_inner_product(b.v,b.v))) >= 0.35
-         GROUP BY b.vec_id ORDER BY drop_id""",
+         GROUP BY b.vec_id ORDER BY drop_id"""),
 
     // s06: recall@10 of the label-blocked IVF vs exact — the s01 and
     // s02 oracles composed, reduced to integer hit counts per query
-    "s06_ann_recall" ->
+    Gate("s06_ann_recall", PipelineQueries.ann_recall,
       """WITH e AS (SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
@@ -1784,13 +1626,13 @@ object SparkEntry {
          SELECT q.query_id AS query_id, CAST(10 AS BIGINT) AS n_exact,
                 CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits
          FROM q LEFT JOIN h ON h.query_id = q.query_id
-         ORDER BY q.query_id""",
+         ORDER BY q.query_id"""),
 
     // s07: the combined IVF-PQ probe — the s03 assignment CTEs (cells +
     // 2-probe selection from the persisted coarse centroids) glued to
     // the s05 ADC CTEs (codes + distance tables from the persisted
     // codebook); candidates are rows whose cell is probed by the query
-    "s07_ivf_pq" ->
+    Gate("s07_ivf_pq", PipelineQueries.pq_ivf_adc,
       """WITH cc AS (SELECT cluster_id, centroid
            FROM '/tmp/graft_s03_centroids/sf0.01/*.parquet'),
          pc AS (SELECT sub_idx, cluster_id, centroid
@@ -1841,11 +1683,11 @@ object SparkEntry {
                 neighbor_id
          FROM adc
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s09: s07's ADC CTEs shortlist 30, then the s01-style exact
     // cosine rerank cuts the final 10
-    "s09_ann_rerank" ->
+    Gate("s09_ann_rerank", PipelineQueries.pq_ivf_rerank,
       """WITH cc AS (SELECT cluster_id, centroid
            FROM '/tmp/graft_s03_centroids/sf0.01/*.parquet'),
          pc AS (SELECT sub_idx, cluster_id, centroid
@@ -1905,9 +1747,9 @@ object SparkEntry {
                 neighbor_id
          FROM rer
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
-    "s01_ann_topk" ->
+    Gate("s01_ann_topk", PipelineQueries.ann_topk,
       """WITH e AS (SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
@@ -1921,12 +1763,12 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s10: int8 scalar quantization — unit vector, per-row symmetric
     // codes round(u*127/maxAbs), integer dots rescaled by the two
     // per-row scales; rank-only output so no float ever hashes
-    "s10_sq8_topk" ->
+    Gate("s10_sq8_topk", PipelineQueries.sq8_topk,
       """WITH e AS (SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
@@ -1955,14 +1797,14 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s08: banded hyperplane LSH — DuckDB regenerates the md5-derived
     // ±1 planes, the exact-integer sign projections over the
     // micro-quantized vectors (floor(x·1e6+0.5): integer sums can
     // never drift between engines), the 4×4-bit band buckets, the
     // OR-of-bands candidate union, and the s01-style cosine top-k cut
-    "s08_ann_lsh" ->
+    Gate("s08_ann_lsh", PipelineQueries.ann_lsh,
       """WITH planes AS (
              SELECT j, list(CASE WHEN substr(md5('lsh_'||j||'_'||k),1,1) < '8'
                                  THEN 1 ELSE -1 END ORDER BY k) AS s
@@ -1995,12 +1837,12 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s15: the multi-probe replay — 4-bit integer SRP signatures (the
     // s08 plane/quantization recipe), probe set = own cell ∪ the 4
     // Hamming-1 cells, exact cosine top-10 of the candidate union
-    "s15_ann_multiprobe" ->
+    Gate("s15_ann_multiprobe", PipelineQueries.ann_multiprobe,
       """WITH planes AS (
              SELECT j, list(CASE WHEN substr(md5('lsh_'||j||'_'||k),1,1) < '8'
                                  THEN 1 ELSE -1 END ORDER BY k) AS s
@@ -2037,11 +1879,11 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s16: the full recall measurement replayed — exact brute-force
     // top-10 (s01's CTEs) intersected with the s15 multi-probe top-10
-    "s16_multiprobe_recall" ->
+    Gate("s16_multiprobe_recall", PipelineQueries.multiprobe_recall,
       """WITH planes AS (
              SELECT j, list(CASE WHEN substr(md5('lsh_'||j||'_'||k),1,1) < '8'
                                  THEN 1 ELSE -1 END ORDER BY k) AS s
@@ -2089,7 +1931,7 @@ object SparkEntry {
          SELECT q.query_id AS query_id, CAST(10 AS BIGINT) AS n_exact,
                 CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits
          FROM q LEFT JOIN h ON h.query_id = q.query_id
-         ORDER BY q.query_id""",
+         ORDER BY q.query_id"""),
 
     // s02: single-probe label-blocked IVF is EXACT within the block
     // (it scans the query's whole bucket), so the full top-k oracle
@@ -2100,7 +1942,7 @@ object SparkEntry {
     // max(0.7·cq − (1−0.7)·max-sim-to-selected), ties to smaller id.
     // (1 - 0.7), NOT 0.3: the Spark side computes 1.0−λ in doubles
     // and 1−0.7 ≠ 0.3 exactly, so the oracle must spell it the same
-    "s12_mmr_rerank" ->
+    Gate("s12_mmr_rerank", PipelineQueries.mmr_rerank,
       """WITH e AS (SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
@@ -2171,11 +2013,11 @@ object SparkEntry {
            UNION ALL SELECT query_id, CAST(3 AS INTEGER), nid FROM s3
            UNION ALL SELECT query_id, CAST(4 AS INTEGER), nid FROM s4
            UNION ALL SELECT query_id, CAST(5 AS INTEGER), nid FROM s5)
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s11: the s02 replay with EVERY vector as a query (block-keyed
     // self-join), rank cut at 3 — the corpus k-NN graph
-    "s11_knn_graph" ->
+    Gate("s11_knn_graph", PipelineQueries.knn_graph,
       """WITH e AS (SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
@@ -2190,12 +2032,12 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 3
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s13: s02's single-probe replay over the lang='en'-restricted
     // corpus — the pre-filter strategy's exactness IS the oracle
     // contract (top-k of the eligible set, no over-fetch heuristics)
-    "s13_filtered_ann" ->
+    Gate("s13_filtered_ann", PipelineQueries.filtered_ann,
       """WITH e AS (SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings
@@ -2212,13 +2054,13 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s14: the post-filter replay — unfiltered per-block top-k′ with
     // k′ = ⌈k·total/eligible⌉ (integer ceil-division, the same
     // arithmetic as the Spark side), then drop non-matching and
     // re-rank by the shortlist's integer rank
-    "s14_filtered_ann_post" ->
+    Gate("s14_filtered_ann_post", PipelineQueries.filtered_ann_post,
       """WITH tot AS (SELECT count(*) AS n FROM documents),
          elig AS (SELECT doc_id FROM documents
            WHERE lang = 'en' AND source = 'src3'),
@@ -2247,9 +2089,9 @@ object SparkEntry {
                 neighbor_id
          FROM filt
          QUALIFY rank <= 1
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
-    "s02_ann_ivf" ->
+    Gate("s02_ann_ivf", PipelineQueries.ann_ivf,
       """WITH e AS (SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
            FROM embeddings),
@@ -2264,7 +2106,7 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s03: the probe is a pure function of the persisted centroids
     // (written by the query itself at fit time — the index-build
@@ -2273,7 +2115,7 @@ object SparkEntry {
     // to the lower cluster_id, exactly Spark's array_sort(struct(d,i))
     // cut), 2-probe bucket selection for queries, then the s01/s02
     // cosine + (cos DESC, id ASC) top-k
-    "s03_ann_ivf_kmeans" ->
+    Gate("s03_ann_ivf_kmeans", PipelineQueries.ann_ivf_kmeans,
       """WITH c AS (SELECT cluster_id, centroid
            FROM '/tmp/graft_s03_centroids/sf0.01/*.parquet'),
          e AS (SELECT vec_id,
@@ -2300,13 +2142,13 @@ object SparkEntry {
                 neighbor_id
          FROM scored
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // s04: every PQ code re-derived from the persisted codebook with
     // the same left-to-right squared-distance sum and lowest-id tie
     // rule; any drift in training persistence, slicing, or argmin
     // breaks 500 rows × 8 codes of exact equality
-    "s04_pq_codes" ->
+    Gate("s04_pq_codes", PipelineQueries.pq_codes,
       """WITH c AS (SELECT sub_idx, cluster_id, centroid
            FROM '/tmp/graft_s04_pq/sf0.01/*.parquet'),
          e AS (SELECT vec_id,
@@ -2329,13 +2171,13 @@ object SparkEntry {
                 CAST(max(CASE WHEN sub_idx=5 THEN cluster_id END) AS INTEGER) AS c5,
                 CAST(max(CASE WHEN sub_idx=6 THEN cluster_id END) AS INTEGER) AS c6,
                 CAST(max(CASE WHEN sub_idx=7 THEN cluster_id END) AS INTEGER) AS c7
-         FROM best GROUP BY vec_id ORDER BY vec_id""",
+         FROM best GROUP BY vec_id ORDER BY vec_id"""),
 
     // s05: codes AND per-query distance tables re-derived from the
     // same codebook; ADC per neighbor summed over subspaces in
     // sub_idx order (list(… ORDER BY sub_idx) → list_sum) to match
     // the Spark side's fixed j-ascending fold bit-for-bit
-    "s05_pq_adc" ->
+    Gate("s05_pq_adc", PipelineQueries.pq_adc,
       """WITH c AS (SELECT sub_idx, cluster_id, centroid
            FROM '/tmp/graft_s04_pq/sf0.01/*.parquet'),
          e AS (SELECT vec_id,
@@ -2368,9 +2210,9 @@ object SparkEntry {
                 neighbor_id
          FROM adc WHERE neighbor_id != query_id
          QUALIFY rank <= 10
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
-    "t01_lang_id" ->
+    Gate("t01_lang_id", PipelineQueries.lang_id,
       s"""WITH sw(sw_lang, sw_word) AS (VALUES ${graft.functions.TextFunctions.stopwords
              .map { case (l, w) => s"('$l','$w')" }.mkString(",")}),
          tok AS (SELECT doc_id,
@@ -2382,9 +2224,9 @@ object SparkEntry {
            QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, sw_lang) = 1)
          SELECT d.doc_id AS doc_id, coalesce(b.sw_lang,'und') AS pred_lang
          FROM documents d LEFT JOIN best b ON d.doc_id = b.doc_id
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
-    "t02_quality_score" ->
+    Gate("t02_quality_score", PipelineQueries.quality_score,
       s"""WITH f AS (SELECT doc_id,
              CAST(length(text) AS BIGINT) AS n_chars_m,
              regexp_split_to_array(trim(lower(text)),'\\s+') AS toks,
@@ -2406,23 +2248,23 @@ object SparkEntry {
                 CAST(round(CAST(punct_r AS DECIMAL(20,10)),4) AS DOUBLE) AS punct_ratio,
                 CAST(round(CAST(0.5*stop_r + 0.3*(1.0-punct_r)
                       + 0.2*least(avg_tl/10.0, 1.0) AS DECIMAL(20,10)), 4) AS DOUBLE) AS quality_score
-         FROM g ORDER BY doc_id""",
+         FROM g ORDER BY doc_id"""),
 
-    "t03_token_count" ->
+    Gate("t03_token_count", PipelineQueries.token_count,
       ("""SELECT doc_id,
                 CAST(len(regexp_split_to_array(trim(lower(text)),'\s+')) AS BIGINT) AS ws_tokens,
                 (length(text)+3)//4 AS bpe_est_tokens,
                 CAST(len(regexp_extract_all(text, '""" +
         graft.functions.TextFunctions.bpePattern.replace("'", "''") +
         """')) AS BIGINT) AS bpe_regex_tokens
-         FROM documents ORDER BY doc_id"""),
+         FROM documents ORDER BY doc_id""")),
 
-    "t04_fingerprint" ->
+    Gate("t04_fingerprint", PipelineQueries.fingerprint,
       """SELECT doc_id,
                 md5(trim(regexp_replace(lower(text),'\s+',' ','g'))) AS fp
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
-    "p03_shard_pack" ->
+    Gate("p03_shard_pack", PipelineQueries.shard_pack,
       """WITH t AS (SELECT doc_id, lang,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+')) AS BIGINT) AS n_tokens
            FROM documents),
@@ -2432,13 +2274,13 @@ object SparkEntry {
            FROM t)
          SELECT doc_id, lang, n_tokens, cum_tokens,
                 CAST(floor((cum_tokens - n_tokens) / 2048.0) AS BIGINT) AS shard_id
-         FROM c ORDER BY lang, doc_id""",
+         FROM c ORDER BY lang, doc_id"""),
 
     // p15: p03's packing rolled to (lang, shard) grain with the
     // order-canonical membership checksum — md5 over the sorted,
     // comma-joined doc-id list (BIGINT→VARCHAR is plain digits in
     // both engines)
-    "p15_shard_manifest" ->
+    Gate("p15_shard_manifest", PipelineQueries.shard_manifest,
       """WITH t AS (SELECT doc_id, lang, source,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+')) AS BIGINT) AS n_tokens
            FROM documents),
@@ -2454,12 +2296,12 @@ object SparkEntry {
                 CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
                 min(doc_id) AS first_doc, max(doc_id) AS last_doc,
                 md5(array_to_string(list_sort(list(doc_id)), ',')) AS checksum
-         FROM sh GROUP BY 1, 2 ORDER BY lang, shard_id""",
+         FROM sh GROUP BY 1, 2 ORDER BY lang, shard_id"""),
 
     // r67: the same batch window again — after a checkpoint restart
     // between the corpus halves, resumed GroupState offsets must
     // reproduce it (a reset offset shifts every leg-2 placement)
-    "r67_stream_state_recovery" ->
+    Gate("r67_stream_state_recovery", StreamingQueries.stream_concat_chunk_recovery,
       """WITH t AS (SELECT lang, doc_id,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+')) AS BIGINT) AS n_tokens
            FROM documents
@@ -2471,12 +2313,12 @@ object SparkEntry {
          SELECT lang, doc_id, n_tokens, start_off,
                 CAST(start_off // 128 AS BIGINT) AS first_example,
                 CAST((start_off + n_tokens - 1) // 128 AS BIGINT) AS last_example
-         FROM o ORDER BY lang, doc_id""",
+         FROM o ORDER BY lang, doc_id"""),
 
     // r66: streaming placement must equal the batch p16 window over
     // the whole corpus — the running-offset state carried across all
     // four ordered micro-batches
-    "r66_stream_concat_chunk" ->
+    Gate("r66_stream_concat_chunk", StreamingQueries.stream_concat_chunk,
       """WITH t AS (SELECT lang, doc_id,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+')) AS BIGINT) AS n_tokens
            FROM documents
@@ -2488,12 +2330,12 @@ object SparkEntry {
          SELECT lang, doc_id, n_tokens, start_off,
                 CAST(start_off // 128 AS BIGINT) AS first_example,
                 CAST((start_off + n_tokens - 1) // 128 AS BIGINT) AS last_example
-         FROM o ORDER BY lang, doc_id""",
+         FROM o ORDER BY lang, doc_id"""),
 
     // r68: the same batch-p17 rank — after a checkpoint restart
     // between the corpus halves, the resumed per-source rank counter
     // must reproduce it (a reset counter shifts every leg-2 key)
-    "r68_stream_interleave" ->
+    Gate("r68_stream_interleave", StreamingQueries.stream_interleave_recovery,
       """WITH sx AS (SELECT source,
              CAST(row_number() OVER (ORDER BY source) - 1 AS BIGINT) AS src_idx
            FROM (SELECT DISTINCT source FROM documents)),
@@ -2507,11 +2349,11 @@ object SparkEntry {
                 CAST((r.src_rank - 1) * n.n + sx.src_idx AS BIGINT)
                   AS interleave_key
          FROM r JOIN sx USING (source) CROSS JOIN n
-         ORDER BY r.doc_id""",
+         ORDER BY r.doc_id"""),
 
     // p17: per-source md5-ordered ranks, dense source index over the
     // sorted source dictionary, key = (rank-1)*n + idx — all integer
-    "p17_epoch_interleave" ->
+    Gate("p17_epoch_interleave", PipelineQueries.epoch_interleave,
       """WITH sx AS (SELECT source,
              CAST(row_number() OVER (ORDER BY source) - 1 AS BIGINT) AS src_idx
            FROM (SELECT DISTINCT source FROM documents)),
@@ -2525,14 +2367,14 @@ object SparkEntry {
                 CAST((r.src_rank - 1) * n.n + sx.src_idx AS BIGINT)
                   AS interleave_key
          FROM r JOIN sx USING (source) CROSS JOIN n
-         ORDER BY r.doc_id""",
+         ORDER BY r.doc_id"""),
 
     // p18: the composed Lee-et-al pipeline — d20's cut-corpus CTE
     // chain feeds p16's per-lang running-offset window over the
     // CLEANED text, and the p15 manifest aggregates at the
     // (lang, 16-example shard) grain. Each stage's SQL is the
     // standalone gate's oracle verbatim, chained.
-    "p18_lee_pipeline" ->
+    Gate("p18_lee_pipeline", PipelineQueries.lee_pipeline,
       """WITH w AS (SELECT doc_id,
              unnest(range(CAST(length(text)-39 AS BIGINT))) AS i,
              unnest(list_transform(range(CAST(length(text)-39 AS BIGINT)),
@@ -2588,12 +2430,12 @@ object SparkEntry {
                 CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
                 min(doc_id) AS first_doc, max(doc_id) AS last_doc,
                 md5(array_to_string(list_sort(list(doc_id)), ',')) AS checksum
-         FROM sh GROUP BY 1, 2 ORDER BY lang, shard_id""",
+         FROM sh GROUP BY 1, 2 ORDER BY lang, shard_id"""),
 
     // p19: the two-level form must equal p16 EXACTLY (the bucket is a
     // prefix of the doc_id order), so its oracle IS p16's single-level
     // SQL — the order-equivalence proof runs cross-engine every round
-    "p19_concat_chunk_scale" ->
+    Gate("p19_concat_chunk_scale", PipelineQueries.concat_chunk_scale,
       """WITH t AS (SELECT lang, doc_id,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+')) AS BIGINT) AS n_tokens
            FROM documents
@@ -2605,7 +2447,7 @@ object SparkEntry {
          SELECT lang, doc_id, n_tokens, start_off,
                 CAST(start_off // 128 AS BIGINT) AS first_example,
                 CAST((start_off + n_tokens - 1) // 128 AS BIGINT) AS last_example
-         FROM o ORDER BY lang, doc_id""",
+         FROM o ORDER BY lang, doc_id"""),
 
     // p20: the compaction manifest recomputed from the ORIGINAL table
     // — file scatter (doc_id mod 64), per-lang (bytes DESC, file_id)
@@ -2613,7 +2455,7 @@ object SparkEntry {
     // then the expected per-bin manifest with the p15 membership
     // checksum; the Spark side reads the REWRITTEN parquet back, so a
     // mismatch anywhere in plan/rewrite/read-back breaks the hash
-    "p20_compaction" ->
+    Gate("p20_compaction", PipelineQueries.compaction_manifest,
       """WITH f AS (SELECT lang, doc_id % 64 AS file_id, doc_id, n_chars
            FROM documents),
          fm AS (SELECT lang, file_id,
@@ -2634,7 +2476,7 @@ object SparkEntry {
                 CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(n_chars) AS BIGINT) AS bytes,
                 md5(array_to_string(list_sort(list(doc_id)), ',')) AS checksum
-         FROM d GROUP BY 1, 2 ORDER BY lang, bin""",
+         FROM d GROUP BY 1, 2 ORDER BY lang, bin"""),
 
     // p21: the merge+split manifest recomputed from the ORIGINAL
     // table — skewed scatter (3/4 of each lang into file 0), file
@@ -2643,7 +2485,7 @@ object SparkEntry {
     // piece cuts for the fat ones, then the expected per-bin manifest
     // with the membership checksum; the Spark side reads the
     // REWRITTEN parquet back
-    "p21_compact_split" ->
+    Gate("p21_compact_split", PipelineQueries.compaction_split_manifest,
       """WITH f AS (SELECT lang,
              CASE WHEN doc_id % 4 < 3 THEN 0
                   ELSE 1 + doc_id % 16 END AS file_id,
@@ -2675,14 +2517,14 @@ object SparkEntry {
                 CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(n_chars) AS BIGINT) AS bytes,
                 md5(array_to_string(list_sort(list(doc_id)), ',')) AS checksum
-         FROM d GROUP BY 1, 2 ORDER BY lang, bin""",
+         FROM d GROUP BY 1, 2 ORDER BY lang, bin"""),
 
     // t29: the shared perceptron cascade composed with p16's packing
     // chain — token counts recomputed from the SAME tb CTE the
     // features fold (one tokenization in the oracle too), gate on
     // score > 0, then the per-lang running-offset example map over
     // the surviving docs
-    "t29_classifier_gate" ->
+    Gate("t29_classifier_gate", PipelineQueries.classifier_gated_corpus,
       (perceptronOracleCtes +
         """,
          nt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens
@@ -2697,7 +2539,7 @@ object SparkEntry {
          SELECT lang, doc_id, score, n_tokens, start_off,
                 CAST(start_off // 128 AS BIGINT) AS first_example,
                 CAST((start_off + n_tokens - 1) // 128 AS BIGINT) AS last_example
-         FROM o ORDER BY lang, doc_id"""),
+         FROM o ORDER BY lang, doc_id""")),
 
     // t27: the E=3 batch-perceptron epochs unrolled as CTEs — the
     // same md5 bucket fold (B=32 + bias bucket 32), all-BIGINT
@@ -2706,18 +2548,18 @@ object SparkEntry {
     // Both perceptron oracles compose the SHARED cascade
     // ([[perceptronOracleCtes]]) so the epoch arithmetic can never
     // diverge between the score gate and the eval gate.
-    "t27_perceptron_quality" ->
+    Gate("t27_perceptron_quality", PipelineQueries.perceptron_quality,
       (perceptronOracleCtes +
         """
          SELECT doc_id, y, score,
                 CASE WHEN score > 0 THEN CAST(1 AS BIGINT)
                      ELSE CAST(-1 AS BIGINT) END AS pred
-         FROM s3 ORDER BY doc_id"""),
+         FROM s3 ORDER BY doc_id""")),
 
     // t28: t27's full train+score chain replayed, rolled to SOURCE
     // grain — per source (label-pure by construction) the predicted-
     // positive and correct counts under the final epoch-3 weights
-    "t28_perceptron_eval" ->
+    Gate("t28_perceptron_eval", PipelineQueries.perceptron_eval,
       (perceptronOracleCtes +
         """
          SELECT source, y, CAST(count(*) AS BIGINT) AS n_docs,
@@ -2726,12 +2568,12 @@ object SparkEntry {
                 CAST(sum(CASE WHEN (score > 0 AND y = 1)
                     OR (score <= 0 AND y = -1) THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_correct
-         FROM s3 GROUP BY 1, 2 ORDER BY source"""),
+         FROM s3 GROUP BY 1, 2 ORDER BY source""")),
 
     // p16: concat-and-chunk — per-lang running token offsets, then
     // integer division by the C=128 example size; the final partial
     // example is emitted (boundary map is total)
-    "p16_concat_chunk" ->
+    Gate("p16_concat_chunk", PipelineQueries.concat_chunk,
       """WITH t AS (SELECT lang, doc_id,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+')) AS BIGINT) AS n_tokens
            FROM documents
@@ -2743,9 +2585,9 @@ object SparkEntry {
          SELECT lang, doc_id, n_tokens, start_off,
                 CAST(start_off // 128 AS BIGINT) AS first_example,
                 CAST((start_off + n_tokens - 1) // 128 AS BIGINT) AS last_example
-         FROM o ORDER BY lang, doc_id""",
+         FROM o ORDER BY lang, doc_id"""),
 
-    "p04_source_mix" ->
+    Gate("p04_source_mix", PipelineQueries.source_mix,
       """WITH b AS (SELECT doc_id, source,
              substr(md5(CAST(doc_id AS VARCHAR)),1,4) AS bkt
            FROM documents)
@@ -2758,7 +2600,7 @@ object SparkEntry {
             OR (source = 'src1' AND bkt < 'c000')
             OR (source = 'src2' AND bkt < '8000')
             OR (source NOT IN ('src0','src1','src2') AND bkt < '4000')
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
     // p07: temperature mixing — budgets from sqrt(n) weights (sqrt is
     // correctly rounded per IEEE-754, so both engines compute the
@@ -2767,7 +2609,7 @@ object SparkEntry {
     // apportionment in BIGINT (base = (qmass*200) // T, leftover
     // seats to the largest remainders with source-ASC ties), then the
     // p07 md5-rank selection. No float anywhere in the allocation.
-    "p14_quality_budget" ->
+    Gate("p14_quality_budget", PipelineQueries.quality_budget,
       """WITH f AS (SELECT doc_id,
              CAST(length(text) AS BIGINT) AS n_chars_m,
              regexp_split_to_array(trim(lower(text)),'\s+') AS toks,
@@ -2809,9 +2651,9 @@ object SparkEntry {
          SELECT sel.doc_id, sel.source, rk
          FROM sel JOIN bud USING (source)
          WHERE rk <= budget
-         ORDER BY source, rk""",
+         ORDER BY source, rk"""),
 
-    "p07_temperature_mix" ->
+    Gate("p07_temperature_mix", PipelineQueries.temperature_mix,
       """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY source),
          w AS (SELECT source,
                  CAST(round(CAST(sqrt(CAST(n AS DOUBLE)) AS DECIMAL(28,10)), 9)
@@ -2829,12 +2671,12 @@ object SparkEntry {
          SELECT r.doc_id, r.source, rk
          FROM r JOIN tgt USING (source)
          WHERE rk <= target_rows
-         ORDER BY source, rk""",
+         ORDER BY source, rk"""),
 
     // t13: bigram LM with add-one smoothing — same DECIMAL-round +
     // sorted-fold float discipline as t12; V from a distinct-unigram
     // scalar subquery
-    "t13_bigram_lm" ->
+    Gate("t13_bigram_lm", PipelineQueries.bigram_lm,
       """WITH toks AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS t
            FROM documents),
@@ -2861,11 +2703,11 @@ object SparkEntry {
          SELECT doc_id, n_bigrams,
                 CAST(round(CAST(s / n_bigrams AS DECIMAL(28,10)), 4)
                   AS DOUBLE) AS lm2_score
-         FROM agg ORDER BY doc_id""",
+         FROM agg ORDER BY doc_id"""),
 
     // p08: curriculum ordering — ntile length deciles (SQL-standard
     // remainder-to-first-buckets in both engines), md5-ranked batches
-    "p08_curriculum" ->
+    Gate("p08_curriculum", PipelineQueries.curriculum,
       """WITH t AS (SELECT doc_id,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+'))
                AS BIGINT) AS n_tokens
@@ -2878,7 +2720,7 @@ object SparkEntry {
                 CAST(row_number() OVER (PARTITION BY decile
                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT)
                   AS batch
-         FROM d ORDER BY batch, decile, doc_id""",
+         FROM d ORDER BY batch, decile, doc_id"""),
 
     // p11: the scale-safe curriculum — decile assignment from
     // value-at-rank cut-points (rank_d = d*(N div 10) + least(d, N mod
@@ -2886,7 +2728,7 @@ object SparkEntry {
     // decile via strict >) instead of a global ntile; the oracle
     // recomputes the same cut-points from the same histogram sweep,
     // so the gate is exact end-to-end
-    "p11_curriculum_scale" ->
+    Gate("p11_curriculum_scale", PipelineQueries.curriculum_scale,
       """WITH t AS (SELECT doc_id,
              CAST(len(regexp_split_to_array(trim(lower(text)),'\s+'))
                AS BIGINT) AS n_tokens
@@ -2908,12 +2750,12 @@ object SparkEntry {
                 CAST(row_number() OVER (PARTITION BY decile
                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT)
                   AS batch
-         FROM dd ORDER BY batch, decile, doc_id""",
+         FROM dd ORDER BY batch, decile, doc_id"""),
 
     // t15: content-defined chunking — a token whose md5 hex starts
     // with '0' ends its chunk; chunk ids are the prefix-count of
     // PRECEDING boundary tokens, hashes fold tokens in position order
-    "t15_cdc_chunks" ->
+    Gate("t15_cdc_chunks", PipelineQueries.cdc_chunks,
       """WITH t AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS toks
            FROM documents),
@@ -2930,11 +2772,11 @@ object SparkEntry {
                 count(*) AS n_toks,
                 md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_hash
          FROM c GROUP BY doc_id, chunk_idx
-         ORDER BY doc_id, chunk_idx""",
+         ORDER BY doc_id, chunk_idx"""),
 
     // d12: chunk-granular duplication over the t15 CDC chunks —
     // same chunk CTEs, then hashes shared by >= 2 distinct docs
-    "d12_cdc_dup_chunks" ->
+    Gate("d12_cdc_dup_chunks", PipelineQueries.cdc_dup_chunks,
       """WITH t AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS toks
            FROM documents),
@@ -2960,11 +2802,11 @@ object SparkEntry {
          SELECT pd.doc_id, pd.n_chunks,
                 coalesce(dd.n_dup_chunks, 0) AS n_dup_chunks
          FROM pd LEFT JOIN dd ON pd.doc_id = dd.doc_id
-         ORDER BY pd.doc_id""",
+         ORDER BY pd.doc_id"""),
 
     // p09: 64-token chunks at stride 48 — chunk count floor((n-1)/48)+1,
     // per-chunk token span and md5 of the joined window
-    "p09_chunking" ->
+    Gate("p09_chunking", PipelineQueries.chunk_docs,
       """WITH t AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS toks
            FROM documents),
@@ -2975,11 +2817,11 @@ object SparkEntry {
                 CAST(ci*48 + 1 AS BIGINT) AS start_tok,
                 CAST(least(ci*48 + 64, n) - ci*48 AS BIGINT) AS n_toks,
                 md5(array_to_string(toks[ci*48+1 : ci*48+64], ' ')) AS chunk_hash
-         FROM c ORDER BY doc_id, chunk_idx""",
+         FROM c ORDER BY doc_id, chunk_idx"""),
 
     // m09: scene cuts — the Y4M synth's luma ramps +17/frame mod 256,
     // so cuts are exactly the wrap points; closed-form replay
-    "m09_scene_cuts" ->
+    Gate("m09_scene_cuts", PipelineQueries.multimodal_scenes,
       """WITH d AS (SELECT doc_id,
              doc_id%13+16 AS nf
            FROM documents),
@@ -2996,11 +2838,11 @@ object SparkEntry {
                 CAST(abs(luma - prev_luma) AS BIGINT) AS jump
          FROM j
          WHERE prev_luma IS NOT NULL AND abs(luma - prev_luma) >= 100
-         ORDER BY doc_id, frame_idx""",
+         ORDER BY doc_id, frame_idx"""),
 
     // t14: one BPE training iteration — word freqs, char-pair weights
     // over the distinct word table, deterministic (weight, pair) top-100
-    "t14_bpe_pairs" ->
+    Gate("t14_bpe_pairs", PipelineQueries.bpe_pairs,
       """WITH toks AS (SELECT unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
          wf AS (SELECT w, CAST(count(*) AS BIGINT) AS wf FROM toks GROUP BY 1),
@@ -3009,7 +2851,7 @@ object SparkEntry {
          p AS (SELECT substr(w, CAST(i+1 AS INTEGER), 2) AS pair, wf FROM idx)
          SELECT pair, CAST(sum(wf) AS BIGINT) AS weight
          FROM p GROUP BY pair
-         ORDER BY weight DESC, pair ASC LIMIT 100""",
+         ORDER BY weight DESC, pair ASC LIMIT 100"""),
 
     // t21: the 3-round BPE trainer unrolled — each round re-derives
     // pair counts over the merged word table, picks the (weight DESC,
@@ -3017,13 +2859,13 @@ object SparkEntry {
     // replace the Spark loop uses (replace() greedy left-to-right
     // semantics are engine-identical; the delimiter scheme makes that
     // equal to greedy BPE merging)
-    "t21_bpe_merges" ->
-      bpeMergesOracle(graft.queries.PipelineQueries.bpeMergeRounds),
+    Gate("t21_bpe_merges", PipelineQueries.bpe_merges,
+      bpeMergesOracle(graft.queries.PipelineQueries.bpeMergeRounds)),
 
     // t25: probes the PERSISTED dict artifact (the d11/p12 pattern —
     // the gate's engine side trains/loads the same parquet), so a
     // stale or drifted dictionary fails the hash compare
-    "t25_bpe_compression" ->
+    Gate("t25_bpe_compression", PipelineQueries.bpe_compression,
       """WITH toks AS (SELECT source,
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -3032,13 +2874,13 @@ object SparkEntry {
                 CAST(sum(d.n_char) AS BIGINT) AS sum_chars,
                 CAST(sum(d.n_sym) AS BIGINT) AS sum_tokens
          FROM toks t JOIN dict d USING (w)
-         GROUP BY t.source ORDER BY t.source""",
+         GROUP BY t.source ORDER BY t.source"""),
 
     // t30: t25's compression eval replayed over the t26 realistic-
     // vocabulary fixture (both corpus and dict artifact read by
     // literal path — the s03 pattern), so the adopt-or-reject metric
     // is cross-engine-verified at a five-figure dictionary too
-    "t30_bpe_compression_large" ->
+    Gate("t30_bpe_compression_large", PipelineQueries.bpe_compression_large,
       (s"""WITH toks AS (SELECT source,
              unnest(regexp_split_to_array(trim(lower(text)),'\\s+')) AS w
            FROM '${graft.queries.PipelineQueries.t26CorpusPath}/documents.parquet/*.parquet'),
@@ -3049,12 +2891,12 @@ object SparkEntry {
                 CAST(sum(d.n_char) AS BIGINT) AS sum_chars,
                 CAST(sum(d.n_sym) AS BIGINT) AS sum_tokens
          FROM toks t JOIN dict d USING (w)
-         GROUP BY t.source ORDER BY t.source"""),
+         GROUP BY t.source ORDER BY t.source""")),
 
     // r64: same exhaustive matrix as t22 — theta's merge-order
     // invariance means four micro-batches through the RocksDB state
     // store must reproduce the batch artifact bit for bit
-    "r64_stream_theta" ->
+    Gate("r64_stream_theta", StreamingQueries.stream_theta_overlap,
       """WITH toks AS (SELECT source,
              regexp_split_to_array(trim(lower(text)),'\s+') AS t
            FROM documents),
@@ -3071,12 +2913,12 @@ object SparkEntry {
            GROUP BY 1, 2)
          SELECT p.src_a, p.src_b, COALESCE(ov.c, 0) AS overlap
          FROM pairs p LEFT JOIN ov USING (src_a, src_b)
-         ORDER BY src_a, src_b""",
+         ORDER BY src_a, src_b"""),
 
     // r65: the SAME exhaustive matrix again — after a checkpoint
     // restart between the two halves of the corpus, the resumed
     // sketch state must reproduce the batch artifact bit for bit
-    "r65_stream_theta_recovery" ->
+    Gate("r65_stream_theta_recovery", StreamingQueries.stream_theta_recovery,
       """WITH toks AS (SELECT source,
              regexp_split_to_array(trim(lower(text)),'\s+') AS t
            FROM documents),
@@ -3093,13 +2935,13 @@ object SparkEntry {
            GROUP BY 1, 2)
          SELECT p.src_a, p.src_b, COALESCE(ov.c, 0) AS overlap
          FROM pairs p LEFT JOIN ov USING (src_a, src_b)
-         ORDER BY src_a, src_b""",
+         ORDER BY src_a, src_b"""),
 
     // t22: exact pairwise distinct-window intersections, zeros
     // included — valid as a hash oracle because at sf0.01 every
     // per-source theta sketch is in the θ = 1 regime (lgNom=14 ≫
     // cardinality), where native intersection estimates are exact
-    "t22_source_overlap" ->
+    Gate("t22_source_overlap", PipelineQueries.source_overlap,
       """WITH toks AS (SELECT source,
              regexp_split_to_array(trim(lower(text)),'\s+') AS t
            FROM documents),
@@ -3116,27 +2958,27 @@ object SparkEntry {
            GROUP BY 1, 2)
          SELECT p.src_a, p.src_b, COALESCE(ov.c, 0) AS overlap
          FROM pairs p LEFT JOIN ov USING (src_a, src_b)
-         ORDER BY src_a, src_b""",
+         ORDER BY src_a, src_b"""),
 
     // t23: re-learns the same 3 merges (the t21 CTE chain on the
     // WEIGHTED table), applies them to the distinct-word track with
     // the same double-space replace, and rolls per-doc token counts
     // through the (word → symbol count) dictionary join
-    "t23_bpe_encode" ->
-      bpeEncodeOracle(graft.queries.PipelineQueries.bpeMergeRounds),
+    Gate("t23_bpe_encode", PipelineQueries.bpe_encode,
+      bpeEncodeOracle(graft.queries.PipelineQueries.bpeMergeRounds)),
 
     // t26: the SAME k-round encode cascade, replayed over the
     // synthetic ≥10k-word fixture corpus (read by literal parquet
     // path, the s03 pattern) — the production-size training run is
     // cross-engine-verified, not just spec-pinned
-    "t26_bpe_encode_large" ->
+    Gate("t26_bpe_encode_large", PipelineQueries.bpe_encode_large,
       bpeEncodeOracle(graft.queries.PipelineQueries.bpeMergeRounds,
-        s"'${graft.queries.PipelineQueries.t26CorpusPath}/documents.parquet/*.parquet'"),
+        s"'${graft.queries.PipelineQueries.t26CorpusPath}/documents.parquet/*.parquet'")),
 
     // g06: 3 synchronized LPA rounds over the d04 pair graph, unrolled —
     // mode pick = row_number over (cnt DESC, lbl ASC), the same
     // (most-frequent, smallest-on-tie) rule as Spark's max(struct(cnt,-lbl))
-    "g06_label_prop" ->
+    Gate("g06_label_prop", PipelineQueries.label_prop,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -3163,11 +3005,11 @@ object SparkEntry {
                 QUALIFY row_number() OVER (PARTITION BY src
                   ORDER BY cnt DESC, lbl ASC) = 1)
          SELECT id AS doc_id, CAST(lbl AS BIGINT) AS community
-         FROM l3 ORDER BY doc_id""",
+         FROM l3 ORDER BY doc_id"""),
 
     // d10: duplicate-passage detection — 8-token window hashes,
     // windows in >= 2 distinct docs are duplicated; integer counts
-    "d10_dup_passages" ->
+    Gate("d10_dup_passages", PipelineQueries.dup_passages,
       """WITH toks AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS t
            FROM documents),
@@ -3179,9 +3021,9 @@ object SparkEntry {
          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
                 CAST(count(*) FILTER (WHERE g IN (SELECT g FROM d)) AS BIGINT)
                   AS dup_windows
-         FROM w GROUP BY doc_id ORDER BY doc_id""",
+         FROM w GROUP BY doc_id ORDER BY doc_id"""),
 
-    "t06_vocab" ->
+    Gate("t06_vocab", PipelineQueries.vocab,
       """WITH toks AS (SELECT doc_id,
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS term
            FROM documents),
@@ -3189,13 +3031,13 @@ object SparkEntry {
          SELECT term, CAST(count(*) AS BIGINT) AS doc_freq,
                 CAST(sum(tf) AS BIGINT) AS term_freq
          FROM pd GROUP BY term
-         ORDER BY doc_freq DESC, term_freq DESC, term ASC LIMIT 100""",
+         ORDER BY doc_freq DESC, term_freq DESC, term ASC LIMIT 100"""),
 
     // t12: mean unigram log2-prob — each summand DECIMAL-rounded before
     // an explicit fold over the SORTED list, so both engines add the
     // same doubles in the same order (bit-reproducible, see the Spark
     // side's rationale)
-    "t12_lm_score" ->
+    Gate("t12_lm_score", PipelineQueries.lm_score,
       """WITH toks AS (SELECT doc_id,
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS term
            FROM documents),
@@ -3214,11 +3056,11 @@ object SparkEntry {
          SELECT doc_id, n_tokens,
                 CAST(round(CAST(s / n_tokens AS DECIMAL(28,10)), 4)
                   AS DOUBLE) AS lm_score
-         FROM agg ORDER BY doc_id""",
+         FROM agg ORDER BY doc_id"""),
 
     // t16: same rounded-summand/sorted-fold discipline as t12 —
     // H = (Σ c·(log2 n − log2 c)) / n over the per-doc count list
-    "t16_token_entropy" ->
+    Gate("t16_token_entropy", PipelineQueries.token_entropy,
       """WITH toks AS (SELECT doc_id,
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS term
            FROM documents),
@@ -3236,11 +3078,11 @@ object SparkEntry {
          SELECT doc_id, n_tokens, n_distinct,
                 CAST(round(CAST(s / n_tokens AS DECIMAL(28,10)), 4)
                   AS DOUBLE) AS entropy
-         FROM a ORDER BY doc_id""",
+         FROM a ORDER BY doc_id"""),
 
     // d14: the Bloom positions replay as the p12 md5 strpos fold, mod
     // m=1024; corpus = even ids, batch = odd; count(hit)=4 ≡ all-set
-    "d14_bloom_prefilter" ->
+    Gate("d14_bloom_prefilter", PipelineQueries.bloom_prefilter,
       """WITH j AS (SELECT unnest(range(4)) AS j),
          corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
          batch AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1),
@@ -3267,7 +3109,7 @@ object SparkEntry {
            GROUP BY b.doc_id)
          SELECT mb.doc_id, mb.maybe_dup,
                 mb.maybe_dup AND coalesce(ex.hit, false) AS is_dup
-         FROM mb JOIN ex USING (doc_id) ORDER BY doc_id""",
+         FROM mb JOIN ex USING (doc_id) ORDER BY doc_id"""),
 
     // t17: the CMS grid rebuilt relationally — positions are the d14
     // md5 fold mod w=16, the grid is sum(tf) per (row, cell), the
@@ -3276,7 +3118,7 @@ object SparkEntry {
     // smoothed log-ratio table quantized to 6dp, 9dp summands folded
     // in sorted order, 4dp final (the t16/t19 float discipline);
     // parenthesization matches the Spark side exactly
-    "t24_dsir_weights" ->
+    Gate("t24_dsir_weights", PipelineQueries.dsir_weights,
       """WITH toks AS (SELECT doc_id, source,
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -3304,9 +3146,9 @@ object SparkEntry {
          SELECT doc_id,
                 round(list_reduce(list_sort(list(sm)), (a, x) -> a + x), 4)
                   AS dsir_score
-         FROM sm GROUP BY doc_id ORDER BY doc_id""",
+         FROM sm GROUP BY doc_id ORDER BY doc_id"""),
 
-    "t17_cms_estimate" ->
+    Gate("t17_cms_estimate", PipelineQueries.cms_estimate,
       """WITH toks AS (SELECT
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS term
            FROM documents),
@@ -3329,11 +3171,11 @@ object SparkEntry {
                 CAST(min(grid.cnt) AS BIGINT) AS cms_estimate
          FROM tp JOIN grid ON grid.j = tp.j AND grid.cell = tp.cell
          GROUP BY tp.term
-         ORDER BY true_count DESC, term""",
+         ORDER BY true_count DESC, term"""),
 
     // t18: the d10 window machinery across the train/eval split —
     // per-doc count of 8-token windows present in the eval set
-    "t18_contamination_density" ->
+    Gate("t18_contamination_density", PipelineQueries.contamination_density,
       """WITH toks AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS t
            FROM documents),
@@ -3346,13 +3188,13 @@ object SparkEntry {
                 CAST(count(*) FILTER (WHERE g IN (SELECT g FROM ev))
                   AS BIGINT) AS n_contaminated
          FROM w WHERE doc_id % 97 != 0
-         GROUP BY doc_id ORDER BY doc_id""",
+         GROUP BY doc_id ORDER BY doc_id"""),
 
     // t20: t18's window machinery with POSITIONS kept — DuckDB zips
     // two same-length unnests positionally, then the identical
     // gaps-and-islands (position - row_number per doc) and max-run
     // rollup; clean docs surface with max_run 0 via the left join
-    "t20_memorization_spans" ->
+    Gate("t20_memorization_spans", PipelineQueries.memorization_spans,
       """WITH toks AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS t
            FROM documents),
@@ -3374,12 +3216,12 @@ object SparkEntry {
          FROM (SELECT doc_id FROM toks
                WHERE len(t) >= 8 AND doc_id % 97 != 0) b
          LEFT JOIN mr ON mr.doc_id = b.doc_id
-         ORDER BY b.doc_id""",
+         ORDER BY b.doc_id"""),
 
     // d15: the d02 exhaustive ground truth restricted to cross-parity
     // (odd batch → even corpus) pairs — the recall gate for the
     // incremental banded probe
-    "d15_incremental_neardup" ->
+    Gate("d15_incremental_neardup", PipelineQueries.incremental_neardup,
       """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
          s AS (SELECT doc_id, unnest(list_distinct(
                  [substr(t, i, 5) FOR i IN range(1, greatest(length(t)-4, 1) + 1)]
@@ -3395,11 +3237,11 @@ object SparkEntry {
          FROM p JOIN sz sa ON sa.doc_id = batch_id
                 JOIN sz sb ON sb.doc_id = corpus_id
          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8
-         ORDER BY batch_id, corpus_id""",
+         ORDER BY batch_id, corpus_id"""),
 
     // t19: JS divergence with the t12 float discipline; the w term is
     // parenthesized EXACTLY as the Spark side computes it
-    "t19_js_divergence" ->
+    Gate("t19_js_divergence", PipelineQueries.js_divergence,
       """WITH toks AS (SELECT source,
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS term
            FROM documents),
@@ -3431,12 +3273,12 @@ object SparkEntry {
                 CAST(round(CAST(list_reduce(list_sort(list(w)),
                   (acc, x) -> acc + x) AS DECIMAL(28,10)), 4) AS DOUBLE)
                   AS js
-         FROM w GROUP BY source ORDER BY source""",
+         FROM w GROUP BY source ORDER BY source"""),
 
     // p13: the persisted p02 component map + p12's integer md5 coin
     // thrown on the COMPONENT id; thresholds are floor(0.90·2³²) and
     // floor(0.95·2³²) as exact integer literals
-    "p13_group_split" ->
+    Gate("p13_group_split", PipelineQueries.group_split,
       """WITH
          cc AS (SELECT doc_id, comp
                 FROM '/tmp/graft_p02_components/sf0.01/*.parquet'),
@@ -3453,11 +3295,11 @@ object SparkEntry {
                 CASE WHEN u32 < 3865470566 THEN 'train'
                      WHEN u32 < 4080218931 THEN 'val'
                      ELSE 'test' END AS split
-         FROM u ORDER BY doc_id""",
+         FROM u ORDER BY doc_id"""),
 
     // g10: the persisted p02 component map, singletons included,
     // folded to a (cluster size → clusters, docs) histogram
-    "g10_cluster_histogram" ->
+    Gate("g10_cluster_histogram", PipelineQueries.cluster_histogram,
       """WITH
          cc AS (SELECT doc_id, comp
                 FROM '/tmp/graft_p02_components/sf0.01/*.parquet'),
@@ -3467,11 +3309,11 @@ object SparkEntry {
                 FROM a GROUP BY comp)
          SELECT csize, CAST(count(*) AS BIGINT) AS n_clusters,
                 CAST(count(*) * csize AS BIGINT) AS n_docs
-         FROM sz GROUP BY csize ORDER BY csize""",
+         FROM sz GROUP BY csize ORDER BY csize"""),
 
     // g09: the g06 3-round LPA replay + integer modularity — per
     // community contrib·4m² = 4·m·L_c − d_c², all BIGINT
-    "g09_modularity" ->
+    Gate("g09_modularity", PipelineQueries.modularity,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -3515,11 +3357,11 @@ object SparkEntry {
                 CAST(4*mm.m*coalesce(intra.intra_edges, 0)
                   - degree_sum*degree_sum AS BIGINT) AS contrib_x4m2
          FROM degc LEFT JOIN intra USING (community) CROSS JOIN mm
-         ORDER BY community""",
+         ORDER BY community"""),
 
     // g08: symmetric edges, one self-join, distinct union of 1- and
     // 2-hop neighbors (self excluded from the 2-hop leg)
-    "g08_twohop" ->
+    Gate("g08_twohop", PipelineQueries.twohop,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -3536,11 +3378,11 @@ object SparkEntry {
                  (SELECT src, dst AS nb FROM e UNION ALL
                   SELECT src, nb FROM two))
          SELECT src AS node_id, CAST(count(*) AS BIGINT) AS n_reach2
-         FROM r GROUP BY src ORDER BY node_id""",
+         FROM r GROUP BY src ORDER BY node_id"""),
 
     // g11: the hub-salted two-hop must equal the unguarded form
     // on every graph — oracle is g08's verbatim
-    "g11_twohop_guarded" ->
+    Gate("g11_twohop_guarded", PipelineQueries.twohop_guarded,
       """WITH d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
            FROM documents),
@@ -3557,13 +3399,13 @@ object SparkEntry {
                  (SELECT src, dst AS nb FROM e UNION ALL
                   SELECT src, nb FROM two))
          SELECT src AS node_id, CAST(count(*) AS BIGINT) AS n_reach2
-         FROM r GROUP BY src ORDER BY node_id""",
+         FROM r GROUP BY src ORDER BY node_id"""),
 
     // g12: the incremental-maintenance gate's oracle recomputes CC
     // FROM SCRATCH over the union of both detectors' edge sets
     // (Jaccard ≥ 0.6 ∪ containment ≥ 0.9) — incremental merge must
     // equal full recompute, label for label
-    "g12_incremental_cc" ->
+    Gate("g12_incremental_cc", PipelineQueries.incremental_components,
       """WITH RECURSIVE
          d AS (SELECT doc_id,
              list_distinct(regexp_split_to_array(trim(lower(text)),'\s+')) AS w
@@ -3584,9 +3426,9 @@ object SparkEntry {
            UNION
            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.node = e.src)
          SELECT src AS doc_id, min(node) AS comp
-         FROM reach GROUP BY src ORDER BY doc_id""",
+         FROM reach GROUP BY src ORDER BY doc_id"""),
 
-    "t07_tfidf" ->
+    Gate("t07_tfidf", PipelineQueries.tfidf,
       """WITH toks AS (SELECT doc_id,
              unnest(regexp_split_to_array(trim(lower(text)),'\s+')) AS term
            FROM documents),
@@ -3600,9 +3442,9 @@ object SparkEntry {
                        / CAST(df.doc_freq AS DOUBLE)) AS DECIMAL(20,10)), 6)
                   AS DOUBLE) AS tfidf
          FROM tf JOIN df USING (term)
-         ORDER BY doc_id, term""",
+         ORDER BY doc_id, term"""),
 
-    "t08_repetition" ->
+    Gate("t08_repetition", PipelineQueries.repetition,
       """WITH a AS (SELECT doc_id,
              regexp_split_to_array(trim(lower(text)),'\s+') AS toks
            FROM documents),
@@ -3627,9 +3469,9 @@ object SparkEntry {
                   ELSE CAST(round(CAST(1.0 - CAST(n_distinct_bigrams AS DOUBLE)/n_bigrams AS DECIMAL(20,10)),4) AS DOUBLE)
                 END AS dup_bigram_frac
          FROM uni JOIN bic ON uni.doc_id = bic.doc_id
-         ORDER BY uni.doc_id""",
+         ORDER BY uni.doc_id"""),
 
-    "t05_sql_surface" ->
+    Gate("t05_sql_surface", PipelineQueries.sql_surface,
       s"""WITH sw(sw_lang, sw_word) AS (VALUES ${graft.functions.TextFunctions.stopwords
              .map { case (l, w) => s"('$l','$w')" }.mkString(",")}),
          tok AS (SELECT doc_id,
@@ -3663,10 +3505,10 @@ object SparkEntry {
          FROM documents d
          LEFT JOIN best b ON d.doc_id = b.doc_id
          JOIN g ON d.doc_id = g.doc_id
-         ORDER BY doc_id""",
+         ORDER BY doc_id"""),
 
     // p05: the Morton interleave reproduced bit-by-bit in SQL
-    "p05_zorder_key" ->
+    Gate("p05_zorder_key", PipelineQueries.zorder_key,
       """WITH s AS (SELECT unnest(generate_series(0, 9)) AS i),
            d AS (SELECT doc_id, doc_id % 1024 AS k1,
                         length(text) % 1024 AS k2
@@ -3674,14 +3516,14 @@ object SparkEntry {
          SELECT d.doc_id,
                 CAST(SUM((((k1 >> i) & 1) << (2*i))
                          + (((k2 >> i) & 1) << (2*i+1))) AS BIGINT) AS zkey
-         FROM d CROSS JOIN s GROUP BY d.doc_id ORDER BY d.doc_id""",
+         FROM d CROSS JOIN s GROUP BY d.doc_id ORDER BY d.doc_id"""),
 
     // p06: the oracle recomputes the corpus-frequency boilerplate
     // dedup INDEPENDENTLY (string_split → GROUP BY para HAVING
     // count(DISTINCT doc) >= 5 → NOT IN → ordered string_agg), not
     // from the synthesis closed form — two derivations of the same
     // cleaning semantics must agree on the reassembled text
-    "p06_boilerplate" ->
+    Gate("p06_boilerplate", PipelineQueries.boilerplate_clean,
       """WITH d AS (SELECT doc_id,
              'intro-' || CAST(doc_id AS VARCHAR) || ' ' || substr(text,1,48)
                || chr(10)||chr(10) || 'brought to you by the ' || source || ' network'
@@ -3705,13 +3547,13 @@ object SparkEntry {
                 count(*) AS n_kept,
                 max(tot.n_total) - count(*) AS n_removed
          FROM k JOIN tot ON k.doc_id = tot.doc_id
-         GROUP BY k.doc_id ORDER BY k.doc_id""",
+         GROUP BY k.doc_id ORDER BY k.doc_id"""),
 
     // t11: PII splice + scrub — the oracle synthesizes the same raw
     // text, then runs DuckDB's OWN regex engine (RE2) over patterns
     // written in the Java∩RE2 common subset; the redacted text itself
     // hash-compares, not just the counts
-    "t11_pii_scrub" ->
+    Gate("t11_pii_scrub", PipelineQueries.pii_scrub,
       """WITH d AS (SELECT doc_id,
              text || ' contact u' || CAST(doc_id AS VARCHAR)
                || '@mail-' || CAST(doc_id%7 AS VARCHAR)
@@ -3733,11 +3575,11 @@ object SparkEntry {
                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
                   '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
                   '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g') AS scrubbed
-         FROM d ORDER BY doc_id""",
+         FROM d ORDER BY doc_id"""),
 
     // t09: exact in the unsaturated sketch regime; same deterministic
     // (count desc, item asc) cut on both sides
-    "t09_topk_sketch" ->
+    Gate("t09_topk_sketch", PipelineQueries.topk_sketch,
       """WITH c AS (SELECT json_extract_string(props, '$.k') AS item,
                            count(*) AS est
                     FROM events GROUP BY 1),
@@ -3745,23 +3587,23 @@ object SparkEntry {
                    row_number() OVER (ORDER BY est DESC, item ASC) AS rank
                  FROM c)
          SELECT CAST(rank AS INTEGER) AS rank, item, est
-         FROM r WHERE rank <= 10 ORDER BY rank""",
+         FROM r WHERE rank <= 10 ORDER BY rank"""),
 
     // t10: the KLL sketch's accuracy CONTRACT is the oracle — the
     // Spark side computes whether each estimate's exact rank interval
     // meets the documented eps bound; the oracle pins all-true. (The
     // sketch values themselves are randomized-compaction outputs and
     // cannot hash-compare.)
-    "t10_kll_bound" ->
+    Gate("t10_kll_bound", PipelineQueries.kll_bound,
       """SELECT g, CAST(p AS DOUBLE) AS p, true AS within_bound
          FROM (SELECT DISTINCT l_returnflag AS g FROM lineitem)
          CROSS JOIN (VALUES (0.25), (0.50), (0.75), (0.95)) t(p)
-         ORDER BY g, p""",
+         ORDER BY g, p"""),
 
     // m03: the WAV round-trip's closed form — the JDK encoder wrote
     // (doc_id % 1000 + 100) frames of 16-bit mono PCM at 8 kHz, so the
     // parsed header must read back exactly this arithmetic
-    "m03_audio_meta" ->
+    Gate("m03_audio_meta", PipelineQueries.multimodal_audio,
       """SELECT doc_id,
                 CAST(8000 AS INTEGER) AS sample_rate,
                 CAST(1 AS INTEGER) AS channels,
@@ -3769,40 +3611,40 @@ object SparkEntry {
                 CAST(round((doc_id % 1000 + 100) * 1000.0 / 8000) AS BIGINT)
                   AS duration_ms,
                 'wave' AS format
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
     // m04: the MP4 box round-trip's closed form (timescale 1000 makes
     // the duration math exact)
-    "m04_video_meta" ->
+    Gate("m04_video_meta", PipelineQueries.multimodal_video,
       """SELECT doc_id,
                 doc_id % 5000 + 1000 AS duration_ms,
                 CAST(doc_id % 3 + 1 AS INTEGER) AS n_tracks,
                 'isom' AS brand
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
-    "m01_multimodal_meta" ->
+    Gate("m01_multimodal_meta", PipelineQueries.multimodal_meta,
       """SELECT doc_id,
                 octet_length(encode(text)) AS n_bytes,
                 octet_length(encode(text))%640 AS width,
                 octet_length(encode(text))%480 AS height,
                 CASE WHEN octet_length(encode(text))%2=0 THEN 'png' ELSE 'jpeg' END AS format
-         FROM documents ORDER BY doc_id""",
+         FROM documents ORDER BY doc_id"""),
 
     // m07: the dedup groups' closed form — docs sharing doc_id%97
     // share an identical synth image (distinct colors per key), so
     // content-hash dedup must recover exactly that grouping
-    "m07_image_dedup" ->
+    Gate("m07_image_dedup", PipelineQueries.multimodal_image_dedup,
       """WITH g AS (SELECT doc_id, doc_id % 97 AS k FROM documents)
          SELECT min(doc_id) AS keep_id, count(*) AS dups,
                 CAST((k % 16) * 2 + 16 AS INTEGER) AS width,
                 CAST(k % 24 + 8 AS INTEGER) AS height
-         FROM g GROUP BY k ORDER BY keep_id""",
+         FROM g GROUP BY k ORDER BY keep_id"""),
 
     // m05: the checkerboard PNG's closed form — even width w means
     // every row holds exactly w/2 pixels of each color, so each
     // channel sum is (w·h/2)(c0+c1) exactly (PNG is lossless; the
     // decoded raster is bit-identical to what the JDK encoder drew)
-    "m05_image_pixels" ->
+    Gate("m05_image_pixels", PipelineQueries.multimodal_pixels,
       """WITH d AS (SELECT doc_id,
              CAST((doc_id%16)*2+16 AS INTEGER) AS w,
              CAST(doc_id%24+8 AS INTEGER) AS h,
@@ -3816,7 +3658,7 @@ object SparkEntry {
                 CAST(w*h//2*bb AS BIGINT) AS sum_b,
                 CAST(299*(w*h//2*rr) + 587*(w*h//2*gg) + 114*(w*h//2*bb)
                      AS BIGINT) AS luma_sum_x1000
-         FROM d ORDER BY doc_id""",
+         FROM d ORDER BY doc_id"""),
 
     // m11: the stripe PNG's closed form — column x carries
     // ((id+7x)%256, (id·3+11x)%256, (id·5+13x)%256) constant down the
@@ -3831,7 +3673,7 @@ object SparkEntry {
     // Uniform brightness b cancels from both sides, so same-k docs
     // group regardless of their grade - the operator's claim, replayed
     // independently.
-    "m12_phash_dedup" ->
+    Gate("m12_phash_dedup", PipelineQueries.multimodal_phash_dedup,
       """WITH d AS (SELECT doc_id, doc_id % 97 AS k,
              CAST((doc_id // 97) % 50 AS BIGINT) AS b,
              CAST(((doc_id % 97) % 12) * 4 + 16 AS INTEGER) AS w
@@ -3850,9 +3692,9 @@ object SparkEntry {
            GROUP BY cs.doc_id)
          SELECT min(doc_id) AS keep_id, CAST(count(*) AS BIGINT) AS dups,
                 CAST(ahash AS BIGINT) AS ahash
-         FROM ah GROUP BY ahash ORDER BY keep_id""",
+         FROM ah GROUP BY ahash ORDER BY keep_id"""),
 
-    "m11_resize" ->
+    Gate("m11_resize", PipelineQueries.multimodal_resize,
       """WITH d AS (SELECT doc_id,
              CAST((doc_id%12)*4+16 AS INTEGER) AS w,
              CAST((doc_id%6)*4+8 AS INTEGER) AS h
@@ -3873,12 +3715,12 @@ object SparkEntry {
                 CAST((h//4)*sg AS BIGINT) AS sum_g,
                 CAST((h//4)*sb AS BIGINT) AS sum_b
          FROM cs, (SELECT unnest(range(4)) AS cy) cy
-         ORDER BY doc_id, cy, cx""",
+         ORDER BY doc_id, cy, cx"""),
 
     // m06: the Y4M synth's closed form — frame k's luma plane is the
     // constant (doc_id + 17k) mod 256, so its sum is w·h·that; only
     // even k survives the everyNth=2 sampler
-    "m06_y4m_frames" ->
+    Gate("m06_y4m_frames", PipelineQueries.multimodal_y4m,
       """WITH d AS (SELECT doc_id,
              CAST((doc_id%8)*2+8 AS INTEGER) AS w,
              CAST((doc_id%6)*2+6 AS INTEGER) AS h,
@@ -3891,13 +3733,13 @@ object SparkEntry {
                 w AS width, h AS height,
                 CAST(w*h*((doc_id + 17*k)%256) AS BIGINT) AS y_sum
          FROM f WHERE k%2 = 0
-         ORDER BY doc_id, frame_idx""",
+         ORDER BY doc_id, frame_idx"""),
 
     // m08: the sawtooth WAV's closed form — sample i of doc d is
     // ((d*31 + 17i) mod 4096) - 2048, so every windowed stat is exact
     // integer arithmetic the oracle can regenerate with generate_series;
     // zero-crossings are within-window sign flips (lag over i)
-    "m08_audio_features" ->
+    Gate("m08_audio_features", PipelineQueries.multimodal_audio_features,
       """WITH d AS (SELECT doc_id, doc_id % 1000 + 100 AS nf FROM documents),
          s AS (SELECT doc_id, unnest(generate_series(0, nf - 1)) AS i
                FROM d),
@@ -3915,11 +3757,11 @@ object SparkEntry {
                               THEN 1 ELSE 0 END) AS INTEGER) AS zero_cross,
                 CAST(max(abs(v)) AS INTEGER) AS peak
          FROM w GROUP BY doc_id, window_idx
-         ORDER BY doc_id, window_idx""",
+         ORDER BY doc_id, window_idx"""),
 
     // m10: silence runs over the same closed-form sawtooth — islands
     // of |v| < 256 lasting >= 4 samples via the i - row_number() trick
-    "m10_silence_runs" ->
+    Gate("m10_silence_runs", PipelineQueries.multimodal_silence,
       """WITH d AS (SELECT doc_id, doc_id % 1000 + 100 AS nf FROM documents),
          s AS (SELECT doc_id, unnest(generate_series(0, nf - 1)) AS i
                FROM d),
@@ -3941,11 +3783,11 @@ object SparkEntry {
                   ORDER BY start_sample) - 1 AS INTEGER) AS seg_idx,
                 CAST(start_sample AS INTEGER) AS start_sample,
                 CAST(n_samples AS INTEGER) AS n_samples
-         FROM keep ORDER BY doc_id, seg_idx""",
+         FROM keep ORDER BY doc_id, seg_idx"""),
 
     // m02: fixed-size byte windows, every 3rd — the oracle reproduces
     // the frame arithmetic (last frame is the remainder)
-    "m02_frame_sample" ->
+    Gate("m02_frame_sample", PipelineQueries.multimodal_frames,
       """WITH d AS (SELECT doc_id, octet_length(encode(text)) AS len
                     FROM documents),
          f AS (SELECT doc_id, len,
@@ -3955,6 +3797,6 @@ object SparkEntry {
          SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
                 CAST(LEAST(256, len - i*256) AS INTEGER) AS n_bytes
          FROM f WHERE i % 3 = 0
-         ORDER BY doc_id, frame_idx""",
+         ORDER BY doc_id, frame_idx"""),
   )
 }

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry gate's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
@@ -32,15 +32,13 @@ object Verify {
     * error.
     */
   private def runTwice(sfDir: String, names: Seq[String]): Unit = {
+    val selected = SparkEntry.select(names)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(cpus).getOrCreate()
     graft.functions.ChCompat.registerAll(spark)
     spark.sparkContext.setLogLevel("WARN")
-    val selected =
-      if (names.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => names.contains(k) }
     var bad = List.empty[String]
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    selected.sortBy(_.name).foreach { case SparkEntry.Gate(name, fn, _) =>
       try {
         val h1 = resultHash(fn(spark, sfDir))
         val h2 = resultHash(fn(spark, sfDir))
@@ -67,9 +65,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional extra args = subset of query names (dev iteration);
     // the driver passes two args and gets the full dump
-    val selected =
-      if (rest.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => rest.contains(k) }
+    val selected = SparkEntry.select(rest)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(cpus).getOrCreate()
     graft.functions.ChCompat.registerAll(spark)
@@ -87,7 +83,7 @@ object Verify {
     // parquet the line above just deleted
     graft.queries.PipelineQueries.clearArtifactMemos()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case SparkEntry.Gate(name, fn, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -112,7 +112,6 @@ object Dedup {
 
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
-    val tE = System.nanoTime()
     // materialize the (often expensive) upstream pair-detector ONCE:
     // a plain union of `pairs` with its flip evaluates the pair plan
     // twice — exchange reuse does not fire across the flipped
@@ -130,9 +129,6 @@ object Dedup {
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("dst"))
       .localCheckpoint()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"CC edges checkpoint: ${(System.nanoTime() - tE) / 1e9}%.2fs")
-    val tL = System.nanoTime()
     // seed comp = min(self, neighbors): round 0's neighbor-min fused
     // into the init as one aggregation over the checkpointed edges —
     // no join, and the loop starts one propagation step ahead
@@ -140,8 +136,6 @@ object Dedup {
       .agg(min("dst").as("m"))
       .select(col("src").as("id"), least(col("src"), col("m")).as("comp"))
       .localCheckpoint()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"CC labels init: ${(System.nanoTime() - tL) / 1e9}%.2fs")
     // the RDD backing the current `labels` when it came from the loop
     // (null for the initial localCheckpoint — different unpersist path)
     var labelsRdd: org.apache.spark.rdd.RDD[
@@ -149,7 +143,6 @@ object Dedup {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val tR = System.nanoTime()
       // neighbor-min then join-back: measured FASTER than fusing both
       // into one union+groupBy (the fused form pushes N+2E rows through
       // the wide aggregation and the hops' 2^h duplication amplifies
@@ -205,9 +198,6 @@ object Dedup {
         }
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       rdd.count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CC round $i: changed=${acc.value} " +
-          f"round=${(System.nanoTime() - tR) / 1e9}%.2fs")
       if (labelsRdd != null) labelsRdd.unpersist(false)
       else unpersistCheckpoint(labels)
       labels = org.apache.spark.sql.graft.ColumnBridge

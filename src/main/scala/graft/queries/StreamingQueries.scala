@@ -103,8 +103,7 @@ object StreamingQueries {
     // writes only the batch's delta; snapshots move to the maintenance
     // thread. Restart legs (r62/r65/r67/r68) replay snapshot+changelog,
     // which is exactly the recovery path a 100-TB deployment runs.
-    s.conf.set(ChangelogConf,
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
+    s.conf.set(ChangelogConf, "true")
     // Stream-stream join state format v3 (optimization round 19, guide
     // §1.2 "per-task work"): formats 1/2 keep FOUR store instances per
     // partition (left/right × keyToNumValues/keyWithIndexToValue), so
@@ -114,8 +113,7 @@ object StreamingQueries {
     // format-invariant (the format is pinned into the checkpoint at
     // first start); only r54 has a stream-stream join today, measured
     // there. RocksDB-only — which is the provider set just above.
-    s.conf.set(JoinStateFormatConf,
-      sys.env.getOrElse("SPARK_GRAFT_JOIN_STATE_FORMAT", "3"))
+    s.conf.set(JoinStateFormatConf, "3")
     try body finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
       def restore(k: String, v: Option[String]): Unit = v match {
